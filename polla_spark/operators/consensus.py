@@ -173,6 +173,25 @@ def missing_sources(long: DataFrame, payloads: DataFrame, resolved: DataFrame) -
     )
 
 
+def _is_mismatch() -> Column:
+    """A category the reference records (pipeline.py:175-201): its
+    sources disagree, or a responded source lacks it."""
+    return (F.col("n_values") > 1) | (F.size("missing_sources") > 0)
+
+
+def _mismatch_fields() -> list[Column]:
+    """One mismatch record's fields, from a ``categories`` row."""
+    return [
+        F.col("categoria"),
+        F.col("winner_valor"),
+        F.col("winner_voters"),
+        F.col("disagreeing"),
+        # deviation key only exists for true disagreements (pipeline.py:183-201)
+        F.when(F.col("n_values") > 1, F.col("max_deviation")).alias("max_deviation"),
+        F.col("missing_sources"),
+    ]
+
+
 def consensus(payloads: DataFrame) -> dict[str, DataFrame]:
     """Full consensus pass. Returns the composed intermediate frames.
 
@@ -188,18 +207,7 @@ def consensus(payloads: DataFrame) -> dict[str, DataFrame]:
         "missing_sources",
         F.coalesce(F.col("missing_sources"), F.array().cast("array<string>")),
     )
-    mismatches = categories.filter(
-        (F.col("n_values") > 1) | (F.size("missing_sources") > 0)
-    ).select(
-        "run_id",
-        "categoria",
-        "winner_valor",
-        "winner_voters",
-        "disagreeing",
-        # deviation key only exists for true disagreements (pipeline.py:183-201)
-        F.when(F.col("n_values") > 1, F.col("max_deviation")).alias("max_deviation"),
-        "missing_sources",
-    )
+    mismatches = categories.filter(_is_mismatch()).select("run_id", *_mismatch_fields())
     return {
         "long": long,
         "ranked": ranked,
@@ -221,17 +229,34 @@ def category_order(long: DataFrame) -> DataFrame:
 
 
 def resolved_map(categories: DataFrame, long: DataFrame) -> DataFrame:
-    """Per run: ``pozos_proximo`` map, entries ordered by first_seen.
+    """Per run: ``pozos_proximo`` map, entries ordered by first_seen,
+    and ``mismatches``, the run's mismatch records in first_seen order
+    (the order the reference's report lists them in).
 
     Note: map entry order does not survive every transport (the
     Python->JVM dict conversion hashes it), so artifact writers pin
     their own canonical order; this ordering is best-effort only.
     """
     order = category_order(long)
+    # a record holds a map, which array_sort cannot order by itself,
+    # hence the comparator on first_seen alone
+    mismatch = F.when(
+        _is_mismatch(),
+        F.struct("first_seen", F.struct(*_mismatch_fields()).alias("m")),
+    )
     return (
         categories.join(order, ["run_id", "categoria"])
         .groupBy("run_id")
         .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(mismatch),
+                    lambda a, b: F.when(a["first_seen"] < b["first_seen"], -1)
+                    .when(a["first_seen"] > b["first_seen"], 1)
+                    .otherwise(0),
+                ),
+                lambda s: s["m"],
+            ).alias("mismatches"),
             F.map_from_entries(
                 F.transform(
                     F.array_sort(
@@ -297,9 +322,21 @@ def confidence_col(n_collected: Column, expected: Column, mismatch_ratio: Column
     )
 
 
-def normalized_records(payloads: DataFrame, expected_sources: int) -> DataFrame:
-    """Assemble the per-run normalized record (pipeline.py:409-417)."""
-    parts = consensus(payloads)
+def normalized_records(
+    payloads: DataFrame,
+    expected_sources: int,
+    parts: dict[str, DataFrame] | None = None,
+) -> DataFrame:
+    """Assemble the per-run normalized record (pipeline.py:409-417),
+    with the run's ``mismatches`` (:func:`resolved_map`) beside it so
+    one query answers a whole run; the optimizer drops that column
+    where it goes unused.
+
+    ``parts`` is ``consensus(payloads)`` when the caller already built
+    it for other outputs, so the plan is constructed once.
+    """
+    if parts is None:
+        parts = consensus(payloads)
     res = resolved_map(parts["categories"], parts["long"])
     prov = provenance(payloads)
     return (
@@ -336,6 +373,7 @@ def normalized_records(payloads: DataFrame, expected_sources: int) -> DataFrame:
             "mismatch_ratio",
             "max_deviation",
             "n_collected",
+            "mismatches",
         )
     )
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from . import API_VERSION
 from .operators import consensus as C
 from .schemas import CATEGORY_LABELS, STATE_ROW
+from .session import local_frame
 from .sources.pozos import collect_payloads, normalize_sources, payloads_to_df
 
 
@@ -73,7 +74,7 @@ def load_state_df(spark: SparkSession, state_path: Path):
                     },
                 }
             )
-    return spark.createDataFrame(rows, STATE_ROW)
+    return local_frame(spark, rows, STATE_ROW)
 
 
 def _record_from_row(row: Row, run_id: str) -> dict[str, Any]:
@@ -193,7 +194,6 @@ def run_pipeline(
     decided = C.decide(
         flagged, mismatch_threshold=mismatch_threshold, force_publish=force_publish
     )
-    mismatches_df = C.consensus(pdf)["mismatches"]
 
     decision_rows = decided.collect()  # THE single driver-side collect
     if len(decision_rows) != 1:
@@ -202,7 +202,6 @@ def run_pipeline(
             "decision rows — use run_pipeline_bulk for multi-run frames"
         )
     decision_row = decision_rows[0]
-    mismatch_rows = mismatches_df.collect()
 
     # --- artifacts (after decision; driver-side single records) ---
     raw_dir.mkdir(parents=True, exist_ok=True)
@@ -239,7 +238,7 @@ def run_pipeline(
         "last_draw": {"sorteo": decision_row["sorteo"],
                       "fecha": record["fecha"]},
         "decision": decision,
-        "mismatches": _mismatch_records(mismatch_rows),
+        "mismatches": _mismatch_records(decision_row["mismatches"] or []),
         "api_version": API_VERSION,
     }
     _write_json(comparison_report_path, report)
@@ -299,17 +298,16 @@ def run_pipeline_bulk(
     single-run ordering).
     """
     out = Path(output_dir)
-    state = (
-        state_df
-        if state_df is not None
-        else spark.createDataFrame([], STATE_ROW)
+    state = state_df if state_df is not None else local_frame(spark, [], STATE_ROW)
+    parts = C.consensus(payloads_df)
+    normalized = C.normalized_records(
+        payloads_df, expected_sources=expected_sources, parts=parts
     )
-    normalized = C.normalized_records(payloads_df, expected_sources=expected_sources)
     flagged = C.with_unchanged(normalized, state)
     decided = C.decide(
         flagged, mismatch_threshold=mismatch_threshold, force_publish=force_publish
     )
-    mismatches = C.consensus(payloads_df)["mismatches"]
+    mismatches = parts["mismatches"]
 
     records = decided.select(
         "run_id",

@@ -77,6 +77,40 @@ def get_spark(
     return spark
 
 
+def local_frame(spark: SparkSession, rows: list[dict], schema):
+    """Driver-side rows (dicts keyed by field name) -> DataFrame.
+
+    ``spark.createDataFrame(list_of_dicts, schema)`` ships the rows
+    through ``parallelize``: the frame is a ``LogicalRDD`` and every
+    scan of it starts Python-worker tasks. A ``pyarrow.Table`` under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a JVM
+    ``LocalRelation`` instead, which scans with no Python worker.
+
+    Timestamps keep the row path's semantics: a naive ``datetime`` is
+    process-local wall-clock time (``TimestampType.toInternal``, i.e.
+    ``time.mktime``), where Arrow alone would read it as UTC. Only
+    top-level timestamp fields get that conversion, so nested ones are
+    refused rather than silently shifted.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for field, arrow_field in zip(schema.fields, arrow_schema):
+        values = [row.get(field.name) for row in rows]
+        if isinstance(field.dataType, TimestampType):
+            values = [field.dataType.toInternal(v) for v in values]
+        elif "timestamp" in field.dataType.simpleString():
+            raise NotImplementedError(f"nested timestamp in field {field.name!r}")
+        if not field.nullable and any(v is None for v in values):
+            raise ValueError(f"field {field.name!r} is not nullable but got None")
+        columns.append(pa.array(values, arrow_field.type))
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one testdata parquet, normalizing timestamp physical types.
 

@@ -382,8 +382,10 @@ def collect_payloads(sources: list[str], overrides: dict[str, str] | None = None
 
 
 def payloads_to_df(spark, payloads: list[dict], run_id: str):
-    """Payload dicts -> SOURCE_PAYLOAD DataFrame (explicit schema)."""
+    """Payload dicts -> SOURCE_PAYLOAD DataFrame (explicit schema), held
+    by the JVM as a local relation (:func:`..session.local_frame`)."""
     from ..schemas import SOURCE_PAYLOAD
+    from ..session import local_frame
 
     rows = []
     for p in payloads:
@@ -406,4 +408,4 @@ def payloads_to_df(spark, payloads: list[dict], run_id: str):
                 "montos": {str(k): int(v) for k, v in (p.get("montos") or {}).items()},
             }
         )
-    return spark.createDataFrame(rows, SOURCE_PAYLOAD)
+    return local_frame(spark, rows, SOURCE_PAYLOAD)
