@@ -238,7 +238,7 @@ def run_pipeline(
         "last_draw": {"sorteo": decision_row["sorteo"],
                       "fecha": record["fecha"]},
         "decision": decision,
-        "mismatches": _mismatch_records(decision_row["mismatches"] or []),
+        "mismatches": _mismatch_records(decision_row["mismatches"]),
         "api_version": API_VERSION,
     }
     _write_json(comparison_report_path, report)
@@ -289,9 +289,9 @@ def run_pipeline_bulk(
     the driver never collects data rows; the returned decisions frame
     is one row per run for the caller to act on.
 
-    This is the 100 TB replay/backfill shape: the consensus operators
-    are keyed by ``run_id`` throughout (operators/consensus.py), so a
-    million historical runs shuffle by (run_id, categoria) exactly like
+    This is the 100 TB replay/backfill shape: the consensus kernel
+    resolves each run inside its own row (operators/consensus.py), so a
+    million historical runs shuffle once on ``run_id`` exactly like
     one. The single-run :func:`run_pipeline` keeps the reference's
     byte-exact artifact format; bulk artifacts are JSONL rows of the
     same records (key order per Spark's ``to_json``, not the canonical
@@ -299,15 +299,13 @@ def run_pipeline_bulk(
     """
     out = Path(output_dir)
     state = state_df if state_df is not None else local_frame(spark, [], STATE_ROW)
-    parts = C.consensus(payloads_df)
-    normalized = C.normalized_records(
-        payloads_df, expected_sources=expected_sources, parts=parts
-    )
+    normalized = C.normalized_records(payloads_df, expected_sources=expected_sources)
     flagged = C.with_unchanged(normalized, state)
     decided = C.decide(
         flagged, mismatch_threshold=mismatch_threshold, force_publish=force_publish
     )
-    mismatches = parts["mismatches"]
+    # the run's mismatch records ride its decision row: one lineage
+    mismatches = decided.select("run_id", F.inline("mismatches"))
 
     records = decided.select(
         "run_id",

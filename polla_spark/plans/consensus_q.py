@@ -16,7 +16,7 @@ sources genuinely agree/disagree).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import consensus as C
@@ -68,19 +68,31 @@ def sparse_payload_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _categories(long: DataFrame) -> DataFrame:
+    """One row per (run, categoria): the engine's own per-run kernel
+    (``C.resolve``) over the derived table, inlined."""
+    return _runs(long).select("run_id", F.inline("cats"))
+
+
+def _runs(long: DataFrame) -> DataFrame:
+    """Long rows -> one resolved row per run; entries sort by (priority,
+    source, categoria, valor), so sources keep registry order."""
+    entries = F.array_sort(
+        F.collect_list(F.struct("source_priority", "source_name", "categoria", "valor"))
+    )
+    return C.resolve(long.groupBy("run_id").agg(entries.alias("entries")), "entries")
+
+
 def q40_consensus_winner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1+A2: vote tally + majority winner with priority tie-break —
-    the engine's own tally/rank operators over the derived table."""
-    long = payload_long(spark, sf_dir)
-    ranked = C.rank_candidates(C.tally_votes(long))
+    """A1+A2: vote tally + majority winner with priority tie-break."""
     return (
-        ranked.filter(F.col("rank") == 1)
+        _categories(payload_long(spark, sf_dir))
         .select(
             "run_id",
             "categoria",
-            F.col("valor").alias("winner_valor"),
+            "winner_valor",
             "votes",
-            F.array_join("voters", ",").alias("winner_voters"),
+            F.array_join("winner_voters", ",").alias("winner_voters"),
         )
         .orderBy("run_id", "categoria")
     )
@@ -106,11 +118,9 @@ ORDER BY run_id, categoria
 
 def q41_consensus_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: max relative deviation vs winner, disagreements only."""
-    long = payload_long(spark, sf_dir)
-    ranked = C.rank_candidates(C.tally_votes(long))
-    resolved = C.attach_deviation(C.resolve_categories(ranked), ranked)
     return (
-        resolved.filter(F.col("n_values") > 1)
+        _categories(payload_long(spark, sf_dir))
+        .filter(F.col("n_values") > 1)
         .select("run_id", "categoria", "winner_valor", "n_values", "max_deviation")
         .orderBy("run_id", "categoria")
     )
@@ -144,24 +154,13 @@ def q42_consensus_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Uses a sparse payload slice (value < 5) so absent combinations
     actually occur — on the dense table every source reports every
-    category and the anti-join is vacuous.
+    category and the missing lists are all empty.
     """
-    long = sparse_payload_long(spark, sf_dir)
-    roster = long.select("run_id", "source_name", "source_priority").distinct()
-    cats = long.select("run_id", "categoria").distinct()
-    voters = long.select("run_id", "categoria", "source_name").distinct()
     return (
-        cats.join(roster, "run_id")
-        .join(voters, ["run_id", "categoria", "source_name"], "left_anti")
-        .groupBy("run_id", "categoria")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("source_priority", "source_name"))),
-                    lambda s: s["source_name"],
-                ),
-                ",",
-            ).alias("missing")
+        _categories(sparse_payload_long(spark, sf_dir))
+        .filter(F.size("missing_sources") > 0)
+        .select(
+            "run_id", "categoria", F.array_join("missing_sources", ",").alias("missing")
         )
         .orderBy("run_id", "categoria")
     )
@@ -186,26 +185,17 @@ ORDER BY c.run_id, c.categoria
 
 def q43_consensus_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6+A7: per-run mismatch ratio and confidence label (expected=4)."""
-    long = payload_long(spark, sf_dir)
-    ranked = C.rank_candidates(C.tally_votes(long))
-    per_cat = C.resolve_categories(ranked)
-    per_run = per_cat.groupBy("run_id").agg(
-        F.count("*").alias("total_categories"),
-        F.sum(F.when(F.col("n_values") > 1, 1).otherwise(0)).alias("mismatched"),
-    )
-    n_src = long.groupBy("run_id").agg(F.countDistinct("source_name").alias("n_sources"))
-    ratio = F.round(F.col("mismatched") / F.col("total_categories"), 4)
     return (
-        per_run.join(n_src, "run_id")
+        _runs(payload_long(spark, sf_dir))
         .select(
             "run_id",
             "total_categories",
-            "mismatched",
+            F.col("mismatched_categories").alias("mismatched"),
             "n_sources",
-            ratio.alias("mismatch_ratio"),
-            C.confidence_col(F.col("n_sources"), F.lit(4), F.col("mismatched")).alias(
-                "confidence"
-            ),
+            F.round("mismatch_ratio", 4).alias("mismatch_ratio"),
+            C.confidence_col(
+                F.col("n_sources"), F.lit(4), F.col("mismatched_categories")
+            ).alias("confidence"),
         )
         .orderBy("run_id")
     )
@@ -237,21 +227,18 @@ ORDER BY p.run_id
 
 def q44_consensus_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 over table scale: status per run (threshold 0.25, dev cap 0.10)."""
-    long = payload_long(spark, sf_dir)
-    ranked = C.rank_candidates(C.tally_votes(long))
-    per_cat = C.attach_deviation(C.resolve_categories(ranked), ranked)
-    per_run = per_cat.groupBy("run_id").agg(
-        F.count("*").alias("total_categories"),
-        F.sum(F.when(F.col("n_values") > 1, 1).otherwise(0)).alias("mismatched"),
-        F.round(F.coalesce(F.max("max_deviation"), F.lit(0.0)), 4).alias("max_dev"),
+    quarantine = (F.col("mismatch_ratio") > 0.25) | (F.col("max_deviation") > 0.10)
+    return (
+        _runs(payload_long(spark, sf_dir))
+        .select(
+            "run_id",
+            "total_categories",
+            F.col("mismatched_categories").alias("mismatched"),
+            F.round("max_deviation", 4).alias("max_dev"),
+            F.when(quarantine, "quarantine").otherwise("publish").alias("status"),
+        )
+        .orderBy("run_id")
     )
-    ratio = F.col("mismatched") / F.col("total_categories")
-    status = F.when((ratio > 0.25) | (F.col("max_dev") > 0.10), "quarantine").otherwise(
-        "publish"
-    )
-    return per_run.select(
-        "run_id", "total_categories", "mismatched", "max_dev", status.alias("status")
-    ).orderBy("run_id")
 
 
 O44 = PAYLOAD_CTE + """

@@ -4,6 +4,7 @@ Runs every Query in the registry on Spark and DuckDB at sf0.01 and
 compares row count, column names, and exact values (order-insensitive).
 
 Usage: python scripts/parity.py [name_substring ...]
+(tables from ``$PARITY_SF_DIR``; a query over a missing table fails)
 """
 
 from __future__ import annotations
@@ -11,11 +12,12 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from polla_spark.plans import registry  # noqa: E402
 from polla_spark.session import get_spark  # noqa: E402
@@ -28,8 +30,12 @@ TABLES = [
 
 
 def duck_con() -> duckdb.DuckDBPyConnection:
+    """One view per table whose parquet exists, so a partial table set
+    (e.g. ``perfbench/data/sf0.01``) serves the queries it covers."""
     con = duckdb.connect()
     for name in TABLES:
+        if not os.path.exists(f"{SF_DIR}/{name}.parquet"):
+            continue
         con.sql(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_DIR}/{name}.parquet')"
         )

@@ -165,6 +165,25 @@ def test_totals_excluded(spark):
     assert r["total_categories"] == 1
 
 
+def test_totals_only_run_has_empty_consensus(spark):
+    # every category is Total*: no consensus rows, but the run's row
+    # still carries typed empty values, never NULL
+    df = payloads_df(spark, [("s1", {"Total estimado": 9999}), ("s2", {"total x": 1})])
+    r = one_row(run_decision(spark, df))
+    assert r["pozos_proximo"] == {}
+    assert r["mismatches"] == []
+    assert r["total_categories"] == 0
+    assert (r["mismatch_ratio"], r["max_deviation"]) == (0.0, 0.0)
+    assert C.consensus(df)["categories"].count() == 0
+
+
+def test_null_montos_source_still_responded(spark):
+    df = payloads_df(spark, [("s1", {"Loto Clásico": 500}), ("s2", None)])
+    r = one_row(run_decision(spark, df))
+    assert r["pozos_proximo"] == {"Loto Clásico": 500}
+    assert [m["missing_sources"] for m in r["mismatches"]] == [["s2"]]
+
+
 def test_unchanged_by_sha_skips(spark):
     df = payloads_df(spark, [("s1", {"Loto Clásico": 1000}), ("s2", {"Loto Clásico": 1000})])
     state = spark.createDataFrame(

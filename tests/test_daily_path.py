@@ -105,6 +105,23 @@ def test_one_collect_per_run_and_planted_outcomes(spark, tmp_path, monkeypatch):
         assert got == (day.status, day.confidence, day.pozos), day.outcome
 
 
+def test_warm_call_job_budget(spark, tmp_path):
+    """The per-run consensus resolves inside one row: a warm call is
+    one shuffle on run_id plus the state aggregate, not a relational
+    chain of ~24 jobs."""
+    days = gen.daily_plan(7, 2)
+    kw = paths(tmp_path)
+    run_pipeline(spark, sources=["all"], loaders=day_loaders(days[0]), **kw)
+    sc = spark.sparkContext
+    sc.setJobGroup("daily-warm-call", "daily-warm-call")
+    try:
+        run_pipeline(spark, sources=["all"], loaders=day_loaders(days[1]), **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("daily-warm-call")
+    assert 1 <= len(jobs) <= 6, len(jobs)
+
+
 #: This day's mismatch records in category first-seen order (openloto's
 #: page order): three disagreements, then the three categories polla lacks.
 QUARANTINE_DAY_MISMATCHES = [
