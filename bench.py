@@ -12,7 +12,8 @@ STDOUT CONTRACT — JSON lines only (everything else goes to stderr):
                      keeps a ~2000-char stdout tail that truncates
                      line 1, so the tail now always carries at least
                      the last chunk intact, and all chunks together
-                     reconstruct the full map; values in centiseconds)
+                     reconstruct the full map; values in seconds,
+                     rounded to 0.01)
   last (compact):   {"metric": "headline_total", "value": <total sec>,
                      "unit": "sec", "n": <query count>, "reps": N,
                      "sf": ..., "noise_ratio": R}
@@ -442,8 +443,8 @@ def main() -> None:
     # the compact total line always fit the tail together), at the
     # end of stdout just before the total. All chunks concatenated
     # reconstruct the full dict: {"metric": "headline_part_<i>of<k>",
-    # "part": i, "of": k, "queries": {...}}. Values are rounded to
-    # centiseconds here (the full line above keeps milliseconds).
+    # "part": i, "of": k, "queries": {...}}. Values are seconds,
+    # rounded to 0.01 here (the full line above keeps 0.001).
     # ADDITIONS-ONLY: line 1 and the final compact line are unchanged.
     chunk_budget = 1500
     chunks: list[dict[str, float]] = [{}]

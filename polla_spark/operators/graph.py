@@ -62,7 +62,11 @@ def _local_union_find(nodes: DataFrame, edge_rows: list) -> DataFrame:
 def _distributed_propagation(
     nodes: DataFrame, edges: DataFrame, *, max_rounds: int
 ) -> DataFrame:
-    """Iterative min-label propagation + one-hop path compression."""
+    """Iterative min-label propagation + one-hop path compression.
+
+    Raises RuntimeError when labels still change after ``max_rounds``:
+    unconverged labels are not components, and returning them would
+    pass a wrong clustering downstream without any signal."""
     labels = nodes.withColumn("label", F.col("node")).persist()
     for _ in range(max_rounds):
         neighbor_min = (
@@ -93,6 +97,11 @@ def _distributed_propagation(
         labels = new_labels.drop("_changed")
         if not changed:
             break
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {max_rounds} "
+            f"rounds: {changed} labels changed in the last round"
+        )
     return labels
 
 

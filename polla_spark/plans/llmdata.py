@@ -94,27 +94,6 @@ FROM documents GROUP BY source ORDER BY source
 _shingles_expr = shingles.shingles_expr
 _with_shingle_sets = shingles.with_shingle_sets
 
-#: session conf opting into the CLUSTER-SCALE subtree
-#: materializations (r13, VERDICT r12 #8). Several duplicate-subtree
-#: persists / candidate prefilters were measured LOSING on the local
-#: sf0.1 bench by paired stash-in/out A/Bs (q87 postings, q90 unigram
-#: census, q213 t2/t3 n-gram censuses, q81's candidate-prefiltered
-#: rescore — numbers in SCALE.md): at this scale the duplicated
-#: subtrees pipeline concurrently on idle cores, so the
-#: materialization barrier costs more than the duplicate work it
-#: removes. On a throughput-bound cluster the same duplicates each
-#: cost a full corpus pass and the calculus flips. Default FALSE so
-#: the local bench keeps the measured-faster shapes; a cluster
-#: deployment sets it true. Every gated site computes IDENTICAL
-#: results either way (pinned in tests/test_subtree_persist_conf.py).
-SUBTREE_PERSIST_CONF = "spark.polla_spark.subtreePersist"
-
-
-def _subtree_persist(spark: SparkSession) -> bool:
-    v = spark.conf.get(SUBTREE_PERSIST_CONF, "false")
-    return (v or "false").lower() == "true"
-
-
 def _snm_neighbors(d, extra_fields: tuple[str, ...] = (), *,
                    include_sh: bool = True):
     """ONE source of truth for sorted-neighborhood candidate
@@ -208,21 +187,54 @@ def _minhash_col(band: int):
     ).alias(f"mh{band}")
 
 
-def with_minhash(d: DataFrame, bands: int = 4) -> DataFrame:
-    """Portable MinHash: one md5 per shingle, sliced into ``bands``
-    independent 32-bit hex hashes (bands x 1 rows scheme).
+def with_minhash(d: DataFrame) -> DataFrame:
+    """Portable MinHash: one md5 per shingle, sliced into 4
+    independent 32-bit hex hashes ``mh0..mh3`` (4 bands x 1 row).
 
     One hash pass per shingle — not one per (shingle, band) — keeps
     the kernel 4x cheaper; md5 is bit-identical in both engines, so
     signatures are oracle-exact.
     """
-    assert bands <= 4  # 32 hex chars / 8
     return (
         d.withColumn("_toks", _toks())
         .withColumn("_shingles", F.expr(_shingles_expr()))
         .withColumn("_md5s", F.transform("_shingles", lambda s: F.md5(s)))
-        .select("*", *[_minhash_col(b) for b in range(bands)])
+        .select("*", *[_minhash_col(b) for b in range(4)])
         .drop("_toks", "_shingles", "_md5s")
+    )
+
+
+def minhash_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig) with one row per MinHash band: the unpivoted
+    signature table every LSH consumer joins or groups on (q53's
+    family, q67, q227, q237/q239, q238, streaming twin #42)."""
+    return with_minhash(docs).select(
+        "doc_id", "mh0", "mh1", "mh2", "mh3"
+    ).selectExpr("doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig")
+
+
+def band_table(bands: DataFrame) -> DataFrame:
+    """Persist a (doc_id, sig) band table and materialize it BEFORE any
+    join reads it: otherwise both join branches race the cold cache
+    and compute the expensive signature projection twice.
+
+    The cache is plan-lifetime: the returned plan still reads it, so
+    it cannot be unpersisted inside a query builder. The bench harness
+    clearCache()s between reps; callers composing many plans in one
+    session should do the same."""
+    bands = bands.persist()
+    bands.count()
+    return bands
+
+
+def band_pairs(
+    probe: DataFrame, build: DataFrame, a: str = "id_a", b: str = "id_b"
+) -> DataFrame:
+    """The band join: (sig, a, b) for every probe row and build row
+    sharing a band value, the two doc ids renamed to ``a``/``b``.
+    Callers add their own pair filter (``<`` or ``!=``) and distinct."""
+    return probe.select(F.col("doc_id").alias(a), "sig").join(
+        build.select(F.col("doc_id").alias(b), "sig"), "sig"
     )
 
 
@@ -262,17 +274,9 @@ def _minhash_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def band_candidates_from(docs: DataFrame) -> DataFrame:
     """The band self-join over an arbitrary documents-shaped frame
     (q222 feeds it the planted-variant union)."""
-    d = with_minhash(docs).select(
-        "doc_id", "mh0", "mh1", "mh2", "mh3"
-    )
-    long = d.selectExpr("doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig").persist()
-    long.count()  # materialize BEFORE the self-join: otherwise both
-    # join branches race the cold cache and compute the expensive
-    # signature projection twice
-    a = long.select(F.col("doc_id").alias("id_a"), "sig")
-    b = long.select(F.col("doc_id").alias("id_b"), "sig")
+    bands = band_table(minhash_bands(docs))
     return (
-        a.join(b, "sig")
+        band_pairs(bands, bands)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -322,18 +326,9 @@ def q67_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import connected_components
 
-    d = with_minhash(_spread(spark, t(spark, sf_dir, "documents"))).select(
-        "doc_id", "mh0", "mh1", "mh2", "mh3"
-    )
-    long = d.selectExpr("doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig").persist()
-    long.count()  # materialize BEFORE the self-join (the q53 lesson,
-    # applied here in r13 — q67 predated it): otherwise both join
-    # branches race the cold cache and compute the expensive
-    # shingle+md5 signature projection twice inside the regime probe
-    a = long.select(F.col("doc_id").alias("src"), "sig")
-    b = long.select(F.col("doc_id").alias("dst"), "sig")
+    bands = band_table(minhash_bands(_spread(spark, t(spark, sf_dir, "documents"))))
     edges = (
-        a.join(b, "sig")
+        band_pairs(bands, bands, "src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
@@ -717,16 +712,13 @@ def q62_simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as q53 (the band join IS the 100 TB plan; banding makes
     Hamming search a shuffle-on-key problem)."""
     d = _with_simhash(_spread(spark, t(spark, sf_dir, "documents"))).select("doc_id", "simhash")
-    long = d.selectExpr(
+    bands = band_table(d.selectExpr(
         "doc_id",
         "stack(4, concat('0:', substring(simhash, 1, 16)), concat('1:', substring(simhash, 17, 16)),"
-        " concat('2:', substring(simhash, 33, 16)), concat('3:', substring(simhash, 49, 16))) as band",
-    ).persist()
-    long.count()  # materialize before the self-join (see q53)
-    a = long.select(F.col("doc_id").alias("id_a"), "band")
-    b = long.select(F.col("doc_id").alias("id_b"), "band")
+        " concat('2:', substring(simhash, 33, 16)), concat('3:', substring(simhash, 49, 16))) as sig",
+    ))
     return (
-        a.join(b, "band")
+        band_pairs(bands, bands)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -1198,38 +1190,17 @@ def q81_lsh_rescored_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     concurrently on idle cores (the persist-paradox class). At
     throughput-bound cluster scale the calculus flips — the default
     form tokenizes every doc twice and either broadcasts a
-    corpus-grain table or degrades to two corpus-grain shuffles — so
-    the prefilter shape is kept behind SUBTREE_PERSIST_CONF
-    (results pinned identical in tests/test_subtree_persist_conf.py).
+    corpus-grain table or degrades to two corpus-grain shuffles; the
+    rejected shape and its numbers are in SCALE.md (r13 section).
     """
     cands = _minhash_band_candidates(spark, sf_dir)
-    docs = t(spark, sf_dir, "documents")
-    if _subtree_persist(spark):
-        cands = cands.persist()
-        cands.count()  # materialize: 3 references below (ids twice +
-        # the join spine) would otherwise race the cold cache and
-        # re-run the band self-join per branch
-        ids = (
-            cands.select(F.col("id_a").alias("doc_id"))
-            .unionByName(cands.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        sh = (
-            _with_shingle_sets(docs.join(F.broadcast(ids), "doc_id"))
-            .select("doc_id", "sh")
-        )
-        wrap = F.broadcast  # candidate-grain by construction
-    else:
-        sh = _with_shingle_sets(docs).select("doc_id", "sh")
-
-        def wrap(df):
-            return df  # planner's choice (broadcasts at local scale)
-
+    # planner's choice of join strategy (broadcasts at local scale)
+    sh = _with_shingle_sets(t(spark, sf_dir, "documents")).select("doc_id", "sh")
     j = cands.join(
-        wrap(sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))),
+        sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),
         "id_a",
     ).join(
-        wrap(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))),
+        sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")),
         "id_b",
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1533,12 +1504,9 @@ def q87_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # duplicate tokenize saves on a query this small); q179, whose
         # bigger plan overlaps other work across the barrier, keeps
         # the persist with the same postings-sized cache argument.
-        # r13: cluster sessions opt in via SUBTREE_PERSIST_CONF — at
-        # throughput-bound scale the duplicate is a full corpus
-        # tokenize pass
+        # At throughput-bound scale the duplicate is a full corpus
+        # tokenize pass and the calculus may flip (SCALE.md, r13)
     )
-    if _subtree_persist(spark):
-        tf = tf.persist()
     df_t = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     tf_norm = (F.col("tfreq") * (_BM25_K1 + 1)) / (
@@ -1724,12 +1692,9 @@ def q90_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<string>"))
     toks_long = d.select(F.explode("_toks").alias("w"))
+    # uni feeds both broadcast builds below and is NOT persisted: the
+    # persist lost the local A/B (see docstring; numbers in SCALE.md)
     uni = toks_long.groupBy("w").agg(F.count("*").alias("c_w"))
-    if _subtree_persist(spark):
-        # cluster opt-in (SUBTREE_PERSIST_CONF): uni feeds both
-        # broadcast builds below — one corpus explode instead of two
-        # at throughput-bound scale; locally the rejected-by-A/B form
-        uni = uni.persist()
     big = (
         d.select(F.explode(bigrams_expr).alias("bg"))
         .groupBy("bg")
@@ -6210,14 +6175,10 @@ def q213_smoothed_lm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 A/B measured the persist form consistently ~0.5-1.0 s slower
     # at sf0.1 (the materialization barrier beats the duplicate
     # ref-slice explode, which pipelines concurrently — the q87
-    # finding); the duplicates are slice-sized, not corpus-sized.
-    # r13: cluster sessions opt in via SUBTREE_PERSIST_CONF (the
-    # duplicate is a reference-slice explode pass at scale)
+    # finding); the duplicates are slice-sized, not corpus-sized
+    # (numbers in SCALE.md)
     t2 = big.groupBy("a", "b").agg(F.count("*").alias("c23"))
     t3 = tri(ref).groupBy("w1", "w2", "w3").agg(F.count("*").alias("c123"))
-    if _subtree_persist(spark):
-        t2 = t2.persist()
-        t3 = t3.persist()
     c2 = t2.groupBy("a").agg(
         F.sum("c23").alias("c12"), F.count("*").alias("n1p2")
     )
@@ -8226,26 +8187,15 @@ def q227_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4 band rows per new doc); the history side is the persisted
     signature table a real deployment keeps bucketed BY sig (here
     rebuilt in-plan — queries are state-free — through the identical
-    `with_minhash` kernel). Work per batch is |delta| probes +
+    `minhash_bands` kernel). Work per batch is |delta| probes +
     |new candidates|, independent of how much history accumulates
     except through bucket width."""
-    d = with_minhash(_spread(spark, t(spark, sf_dir, "documents"))).select(
-        "doc_id", "mh0", "mh1", "mh2", "mh3"
-    )
-    # Deliberate PLAN-LIFETIME cache (the q218/q210 discipline): the
-    # band-signature table feeds both the history and delta sides of
-    # the probe join, so it cannot be unpersisted inside this builder
-    # — the returned plan still reads it. The bench harness
-    # clearCache()s between reps; callers composing many plans in one
-    # session should do the same.
-    long = d.selectExpr(
-        "doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig"
-    ).persist()
-    long.count()  # q53's materialize-before-self-join discipline
-    delta = long.filter(F.pmod("doc_id", F.lit(3)) == 0)
+    # the band table feeds both the history and delta sides of the
+    # probe join (plan-lifetime cache, see band_table)
+    bands = band_table(minhash_bands(_spread(spark, t(spark, sf_dir, "documents"))))
+    delta = bands.filter(F.pmod("doc_id", F.lit(3)) == 0)
     cand = (
-        delta.select(F.col("doc_id").alias("id_n"), "sig")
-        .join(long.select(F.col("doc_id").alias("id_o"), "sig"), "sig")
+        band_pairs(delta, bands, "id_n", "id_o")
         .filter(F.col("id_n") != F.col("id_o"))
         .select(
             F.least("id_n", "id_o").alias("id_a"),
@@ -9153,19 +9103,12 @@ def _incremental_labels(
     q227 snapshot convention), delta = % 3 == 0."""
     from ..operators.graph import connected_components, merge_components
 
-    d = with_minhash(_spread(spark, t(spark, sf_dir, "documents"))).select(
-        "doc_id", "mh0", "mh1", "mh2", "mh3"
-    )
-    # plan-lifetime signature cache (the q227/q218 discipline): both
-    # the history band join and the delta probe read it
-    long = d.selectExpr(
-        "doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig"
-    ).persist()
-    long.count()  # materialize before self-join
-    hist = long.filter(F.pmod("doc_id", F.lit(3)) != 0)
+    # plan-lifetime band table (see band_table): both the history band
+    # join and the delta probe read it
+    bands = band_table(minhash_bands(_spread(spark, t(spark, sf_dir, "documents"))))
+    hist = bands.filter(F.pmod("doc_id", F.lit(3)) != 0)
     hist_edges = (
-        hist.select(F.col("doc_id").alias("src"), "sig")
-        .join(hist.select(F.col("doc_id").alias("dst"), "sig"), "sig")
+        band_pairs(hist, hist, "src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
@@ -9176,11 +9119,9 @@ def _incremental_labels(
     )
     labels = connected_components(hist_nodes, hist_edges)
     delta_edges = (
-        long.filter(F.pmod("doc_id", F.lit(3)) == 0)
-        .select(F.col("doc_id").alias("id_n"), "sig")
-        .join(long.select(F.col("doc_id").alias("id_o"), "sig"), "sig")
-        .filter(F.col("id_n") != F.col("id_o"))
-        .select(F.col("id_n").alias("src"), F.col("id_o").alias("dst"))
+        band_pairs(bands.filter(F.pmod("doc_id", F.lit(3)) == 0), bands, "src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
         .distinct()
     )
     new_nodes = docs.filter(F.pmod("doc_id", F.lit(3)) == 0).select(
@@ -9220,11 +9161,8 @@ def q238_capped_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size cap grid on a broadcast frame."""
     from pyspark.sql.window import Window
 
-    d = with_minhash(_spread(spark, t(spark, sf_dir, "documents"))).select(
-        "doc_id", "mh0", "mh1", "mh2", "mh3"
-    )
     ranked = (
-        d.selectExpr("doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig")
+        minhash_bands(_spread(spark, t(spark, sf_dir, "documents")))
         .filter(F.col("sig").isNotNull())
         .withColumn(
             "rn",

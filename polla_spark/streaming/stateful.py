@@ -377,11 +377,10 @@ def lsh_pairs_stateful(docs: DataFrame, max_bucket: int | None = None) -> DataFr
     crawl dedup keeps the band-signature buckets as STATE and probes
     each micro-batch against them).
 
-    The signature kernel is the IDENTICAL ``with_minhash`` +
-    ``stack(4, ...)`` unpivot batch q53/q227 run (one definition, two
-    transports); the keyed state carries each bucket's id list and
-    the kernel emits every candidate pair exactly once, when its
-    later member arrives. Shuffle per micro-batch: ONE hash exchange
+    The signature kernel is the IDENTICAL ``minhash_bands`` unpivot
+    batch q53/q227 run (one definition, two transports); the keyed
+    state carries each bucket's id list and the kernel emits every
+    candidate pair exactly once, when its later member arrives. Shuffle per micro-batch: ONE hash exchange
     of the delta's 4 band rows per doc — work is |delta| probes +
     |new candidate pairs|, independent of accumulated history size
     (the q227 100 TB contract, now with history genuinely carried as
@@ -391,11 +390,9 @@ def lsh_pairs_stateful(docs: DataFrame, max_bucket: int | None = None) -> DataFr
     None keeps the twin exactly ≡ batch)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..plans.llmdata import with_minhash
+    from ..plans.llmdata import minhash_bands
 
-    sigs = with_minhash(docs).selectExpr(
-        "doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig"
-    )
+    sigs = minhash_bands(docs)
     # null-text docs have NULL signatures: the batch tiers' equi-join
     # drops them (nulls never match), but a streaming groupBy would
     # GROUP them into one bucket and invent pairs — filter to match

@@ -34,6 +34,19 @@ def test_distributed_propagation(spark):
     assert _run(spark, threshold=0) == EXPECTED
 
 
+def test_propagation_raises_when_rounds_run_out(spark):
+    """A 64-node path needs more than two propagation rounds: running
+    out of rounds must raise, never return unconverged labels."""
+    n = 64
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
+    path = [(i, i + 1) for i in range(n - 1)]
+    edges = spark.createDataFrame(
+        path + [(b, a) for a, b in path], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match=r"in 2 rounds: \d+ labels changed"):
+        connected_components(nodes, edges, local_threshold=0, max_rounds=2)
+
+
 def test_paths_agree_on_real_banding_graph(spark):
     """Union-find endgame and distributed propagation must produce the
     identical labeling on the real MinHash-LSH candidate graph (the
