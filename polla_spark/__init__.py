@@ -6,7 +6,8 @@ majority-vote consensus -> change-detection -> decision -> publish)
 as idiomatic Spark DataFrame / SQL plans, and extends it with the
 relational + LLM-data-pipeline operator inventory declared in
 SURVEY.md §2.6 (joins, windows, rollups, dedup families, similarity
-search, text analysis, multimodal columns, streaming).
+search, text analysis, multimodal columns), plus the daily pipeline
+run as a Structured Streaming ``foreachBatch``.
 
 Design rules (SURVEY.md §7):
 - explicit StructType schemas everywhere, never inference in prod paths;

@@ -1,16 +1,13 @@
-"""Shared relational-bloom semantics (batch q183 ≡ its streaming
-twin — the one-source-of-truth pattern of functions/quality.py and
-functions/histogram.py).
+"""Relational-bloom semantics of q183.
 
 The filter is pure relational arithmetic so it is bit-identical
-across engines AND across batch/streaming: k = 3 bit positions per
+across engines: k = 3 bit positions per
 key from seeded md5 (the q120 portable-hash idiom), folded into
 32-bit-per-word masks, aggregated with ``bit_or``. Because ``bit_or``
 is associative, commutative and IDEMPOTENT, the word table is
-merge-closed in the strongest sense — any partition of the input
-into micro-batches (and any re-merge of already-merged partials)
-yields the same words, so a streamed build equals a one-shot batch
-build EXACTLY (pinned in tests/test_streaming.py).
+merge-closed in the strongest sense — any partitioning of the input
+(and any re-merge of already-merged partials) yields the same
+words.
 """
 
 from __future__ import annotations
@@ -44,8 +41,7 @@ def bloom_positions(df: DataFrame) -> DataFrame:
 
 def bloom_word_table(keys: DataFrame) -> DataFrame:
     """(hh) frame → the ≤``BLOOM_BITS/32``-row (w, word) filter table.
-    One ``bit_or`` aggregation — works identically as a batch groupBy
-    or a streaming update-mode aggregation."""
+    One ``bit_or`` aggregation."""
     return bloom_positions(keys).groupBy("w").agg(
         F.bit_or("mask").alias("word")
     )

@@ -1,16 +1,12 @@
-"""Shared count-min-sketch semantics (batch q188 ≡ its streaming
-twin — the one-source-of-truth pattern of functions/bloom.py /
-quality.py / histogram.py / diversity.py).
+"""Count-min-sketch semantics of q188.
 
 Cormode & Muthukrishnan's count-min sketch, expressed in PURE
-relational algebra so it is bit-identical across engines AND across
-batch/streaming: each token occurrence increments ``CM_D`` counters
-whose coordinates come from seeded md5 (the q120/q183 portable-hash
-idiom), and a counter is just a SUM — associative + commutative, so
-the counter table is merge-closed: any micro-batch cut of the input
-(and any re-merge of already-merged partials) yields the same
-``CM_D × CM_W`` table, and a streamed build equals a one-shot batch
-build EXACTLY (pinned in tests/test_streaming.py).
+relational algebra so it is bit-identical across engines: each token
+occurrence increments ``CM_D`` counters whose coordinates come from
+seeded md5 (the q120/q183 portable-hash idiom), and a counter is just
+a SUM — associative + commutative, so the counter table is
+merge-closed: any partitioning of the input (and any re-merge of
+already-merged partials) yields the same ``CM_D × CM_W`` table.
 
 Why this is THE 100 TB frequency-estimation shape: the aggregation
 keyspace is a CONSTANT 8192 cells, so map-side combine collapses each
@@ -56,9 +52,8 @@ def cm_positions(toks: DataFrame) -> DataFrame:
 
 def cm_sketch(toks: DataFrame) -> DataFrame:
     """(term) occurrence frame → the ≤``CM_D × CM_W``-row
-    (r, pos, counter) sketch. ONE fixed-keyspace aggregation — works
-    identically as a batch groupBy or a streaming update-mode
-    aggregation, and map-side combine bounds the exchange at
+    (r, pos, counter) sketch. ONE fixed-keyspace aggregation, and
+    map-side combine bounds the exchange at
     partitions × 8192 rows at any corpus size."""
     return (
         cm_positions(toks.select("term"))

@@ -1,12 +1,8 @@
-"""Shared Simpson-diversity semantics (batch q186 ≡ its streaming
-twin — the one-source-of-truth pattern of functions/quality.py /
-histogram.py / bloom.py).
+"""Simpson-diversity semantics of q186.
 
 The (doc_id, ch) character census is a plain count — merge-closed
-across any micro-batch cut — and the report (Σc², n, ppm diversity,
-least-diverse top-15) runs over the census, so streaming needs no
-extra machinery: census partials in update mode, max-collapse +
-report at read time.
+across any partitioning — and the report (Σc², n, ppm diversity,
+least-diverse top-15) runs over the census.
 """
 
 from __future__ import annotations

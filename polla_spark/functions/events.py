@@ -1,17 +1,9 @@
-"""Shared event-semantics definitions used by BOTH the batch plans
-(plans/windows_q.py q148/q149/q150) and their streaming twins
-(streaming/windows.py).
-
-One source of truth per mapping: the r3 clamped-balance defect (the
-streaming twin mis-mapped unknown event types because the delta table
-was duplicated) is exactly the drift class this module removes — if
-an event type is added or a bit reordered, batch and streaming move
-together or a streaming==batch test fails, never silently diverge.
+"""Event-semantics definitions of the q148/q149/q150 plans
+(plans/windows_q.py): the behavior-mask bit order, the conversion
+endpoints and the clamped-balance delta table, one definition each.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -21,9 +13,8 @@ BEHAVIOR_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 def behavior_flag_aggs() -> list[Column]:
-    """Per-user monotone flags, one ``max(case)`` per behavior type —
-    bool-or partials (merge-closed, so streaming update rows collapse
-    by ``max``). Columns are named f0..f{k-1} in BEHAVIOR_TYPES order."""
+    """Per-user monotone flags, one ``max(case)`` per behavior type.
+    Columns are named f0..f{k-1} in BEHAVIOR_TYPES order."""
     return [
         F.max(F.when(F.col("event_type") == ty, 1).otherwise(0)).alias(f"f{i}")
         for i, ty in enumerate(BEHAVIOR_TYPES)
@@ -52,8 +43,7 @@ def behavior_labels_col() -> Column:
 
 def first_touch_aggs() -> list[Column]:
     """q149's conversion endpoints: first view / first purchase as
-    conditional ``min`` aggregates (merge-closed; streaming update
-    rows collapse by ``min``)."""
+    conditional ``min`` aggregates."""
     return [
         F.min(
             F.when(F.col("event_type") == "view", F.col("ts"))
@@ -94,13 +84,12 @@ BALANCE_DEFAULT = -50
 
 
 def balance_delta_col() -> Column:
-    """The q150 per-event delta as a JVM column (batch path).
+    """The q150 per-event delta as a JVM column.
 
-    A purchase with a NULL or NaN value contributes 0 (defined
-    explicitly so batch and streaming agree — without the guards the
-    batch window would silently drop a NULL row from the sum, and
-    under Spark 4's default ANSI mode ``CAST(NaN AS LONG)`` would
-    abort the whole query while the streaming kernel returned 0)."""
+    A purchase with a NULL or NaN value contributes 0: without the
+    guards the window would silently drop a NULL row from the sum,
+    and under Spark 4's default ANSI mode ``CAST(NaN AS LONG)`` would
+    abort the whole query."""
     c = F.when(
         F.col("event_type") == "purchase",
         F.coalesce(
@@ -114,12 +103,3 @@ def balance_delta_col() -> Column:
         c = c.when(F.col("event_type") == ty, F.lit(d))
     return c.otherwise(F.lit(BALANCE_DEFAULT)).cast("long")
 
-
-def balance_delta_py(event_type: str, value: float) -> int:
-    """The identical mapping for the streaming Python kernel.
-    Null/NaN purchase value -> 0, matching balance_delta_col."""
-    if event_type == "purchase":
-        if value is None or math.isnan(value):
-            return 0
-        return int(math.floor(value * 100))
-    return BALANCE_DELTAS.get(event_type, BALANCE_DEFAULT)

@@ -1,9 +1,5 @@
-"""Shared histogram-rank percentile algebra: ONE source of truth for
-the batch plan (q130) and its streaming twin
-(``streaming/windows.histogram_median_partials`` /
-``finish_histogram_median``), the same drift-killing pattern as
-``functions/events.py`` — both engines import the identical census
-shape and the identical nearest-rank finisher, so they cannot diverge.
+"""Histogram-rank percentile algebra of q130: the census shape and
+the nearest-rank finisher.
 
 The kernel: exact per-segment median/p90 WITHOUT sorting the data.
 The only data-sized stage is a mergeable partial agg to a
@@ -11,7 +7,7 @@ The only data-sized stage is a mergeable partial agg to a
 runs over the HISTOGRAM (bounded by the value domain regardless of
 input size) and the nearest-rank pick is pure integer arithmetic
 (``2*cum >= total`` ⇔ cum ≥ ceil(n/2)) — bit-identical across engines
-and across micro-batch cuts (counts merge).
+and across partitionings (counts merge).
 """
 
 from __future__ import annotations
@@ -22,8 +18,7 @@ from pyspark.sql import functions as F
 
 def cents_histogram(customers: DataFrame) -> DataFrame:
     """The (segment, cents) census: quantize acctbal to integer cents
-    and count. Mergeable — identical as a batch partial agg and as a
-    streaming update-mode aggregation."""
+    and count. Mergeable, so map-side partial aggregation applies."""
     return (
         customers.select(
             "c_mktsegment",

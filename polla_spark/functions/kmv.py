@@ -1,6 +1,4 @@
-"""Shared KMV (k-minimum-values / theta) distinct sketch — batch q191
-≡ its streaming twin (the one-source-of-truth pattern of
-functions/bloom.py / cmsketch.py / diversity.py).
+"""KMV (k-minimum-values / theta) distinct sketch of q191 and q203.
 
 Bar-Yossef et al.'s KMV estimator: hash every element to a uniform
 integer and keep only the K smallest DISTINCT hash values. If the
@@ -14,10 +12,8 @@ family, expressed in PURE relational algebra:
   recomputable bit-for-bit by the DuckDB oracle, so unlike HLL/KLL
   (q38/q178, rows-only) the estimate is oracle-EXACT;
 - ``min-k`` is MERGE-CLOSED: min-k(A ∪ B) = min-k(min-k(A) ∪
-  min-k(B)), so per-partition / per-micro-batch / per-group minima
-  union into the global sketch losslessly — the streaming twin's
-  per-key state is the ≤K-long minima list, pinned equal to the
-  batch sketch in tests/test_streaming.py;
+  min-k(B)), so per-partition / per-group minima union into the
+  global sketch losslessly (pinned in tests/test_kernel_units.py);
 - set algebra for free: the union sketch is min-k over the DISTINCT
   union of per-group minima (same term ⇒ same hash, so duplicates
   collapse), which is how q191 derives its corpus-wide 'ALL' row
@@ -30,12 +26,10 @@ same per-distinct cost as the exact census's partial agg. What the
 sketch removes is everything AFTER it: the rank exchange is
 WindowGroupLimit-bounded to ≤K rows per scope per task, the global
 state is K longs per group (the census's second stage is
-distinct-sized), and the minima are merge-closed — which is what
-makes the streaming build exact with bounded state. For truly
+distinct-sized), and the minima are merge-closed. For truly
 adversarial cardinality the first exchange too can be K-bounded by
 a per-partition min-k combiner (the ``operators/sketch.mg_partials``
-pattern / the streaming twin's stateful kernel) at the price of a
-Python stage; the native plan here keeps everything in codegen.
+pattern) at the price of a Python stage; the native plan here keeps everything in codegen.
 Accuracy is the standard RSE ≈ 1/sqrt(K-2) (~6.3% at K=256) — a
 statistical bound, not a structural one, so q191 reports the signed
 error against the exact census rather than asserting it in-plan.
@@ -82,9 +76,7 @@ def kmv_guard_reserved(minima: DataFrame, scope: str = "ALL") -> DataFrame:
     a REAL scope value: asserts ``scope != label`` on every (already
     label-sized, ≤K-per-scope) minima row, aborting loudly instead of
     silently folding a genuine scope named 'ALL' into the union
-    sketch. One source of truth for batch q191 AND the streaming
-    finisher (round-6 advice: the twin paths must share the guard so
-    their semantics can't diverge). ``assert_true`` returns NULL on
+    sketch (q191). ``assert_true`` returns NULL on
     success, hence the coalesce-to-True filter keeping it alive
     through the optimizer (the q177 pattern)."""
     return minima.filter(
@@ -139,7 +131,7 @@ def kmv_estimate(minima: DataFrame) -> DataFrame:
 
 def kmv_set_algebra(minima: DataFrame) -> DataFrame:
     """Theta-sketch SET ALGEBRA over a (scope, h) minima table — the
-    shared kernel of batch q203 and its streaming twin (#30): for
+    kernel of q203: for
     every scope pair a < b, estimate |A ∩ B| and |A \\ B| from the
     sketches alone.
 
@@ -151,9 +143,8 @@ def kmv_set_algebra(minima: DataFrame) -> DataFrame:
     are already ≤K rows per scope, so every join below is label-sized.
 
     Returns (lang_a, lang_b, theta, n_ab, n_a, est_common, est_only_a)
-    ordered by pair. Estimates are deterministic given the minima —
-    and the minima are merge-closed — so the streamed report equals
-    the batch report EXACTLY (pinned in tests/test_streaming.py).
+    ordered by pair. Estimates are deterministic given the minima,
+    and the minima are merge-closed.
     """
     th = (
         minima.groupBy("scope")
@@ -165,8 +156,8 @@ def kmv_set_algebra(minima: DataFrame) -> DataFrame:
             .alias("theta"),
         )
     )
-    # rename BEFORE the self-cross-join: alias()-based self-joins of a
-    # streaming-derived plan hit conflicting-reference resolution
+    # rename BEFORE the self-cross-join: alias()-based self-joins can
+    # hit conflicting-reference resolution
     ta = th.select(
         F.col("scope").alias("lang_a"), F.col("theta").alias("theta_a")
     )

@@ -1,7 +1,7 @@
 """Fellegi-Sunter probabilistic record linkage — ONE source of truth
 for the field-agreement geometry, the millibit scoring weights, and
 the exact-ppm EM training algebra shared by q206 (scoring), q207
-(training), q208 (trained classification) and streaming twin #32.
+(training) and q208 (trained classification).
 
 Everything here is EXACT INTEGER arithmetic so Spark and the DuckDB
 oracle hash identically:
@@ -300,7 +300,7 @@ def fs_init_params(spark) -> DataFrame:
 def fs_param_cols() -> list[str]:
     """The parameter report columns (p, m1..mN, u1..uN) — derived
     from :data:`FS_FIELDS` so a comparator addition cannot leave a
-    consumer (q207, the streaming finisher) at the old width."""
+    consumer (q207) at the old width."""
     return (
         ["p"]
         + [f"m{k}" for k in range(1, _N + 1)]
@@ -315,10 +315,9 @@ def fs_census_flag_cols() -> list[str]:
 
 def fs_em_report(spark, census: DataFrame, rounds: int = 2) -> DataFrame:
     """The (round, p, m…, u…) training report — init + ``rounds`` EM
-    rounds over ``census``. ONE assembly shared by batch q207 and the
-    streaming twin's finisher (a hardcoded column list in either
-    would silently drop fields when a comparator is added — r8 review
-    finding).
+    rounds over ``census``. ONE assembly for q207 (a hardcoded column
+    list would silently drop fields when a comparator is added — r8
+    review finding).
 
     r12 materialized the census (≤2^N rows by construction)
     DRIVER-side so the EM recursion ran over LocalRelations; r13 runs
@@ -345,9 +344,8 @@ def fs_classify(spark, flags: DataFrame, *, ordered: bool = True) -> DataFrame:
     """q208's trained-classification tail over a ``(doc_a, doc_b,
     w_dist, g1..g4)`` frame: census → 2 exact-ppm EM rounds →
     posterior table → broadcast classification. ONE assembly shared
-    by batch q208 and streaming twin #35's finisher (the
-    fs_em_report discipline: a threshold or comparator change moves
-    both paths together).
+    by q208, q214 and q215 (the fs_em_report discipline: a threshold
+    or comparator change moves every consumer together).
 
     The census is ≤16 rows and is materialized DRIVER-side (one
     deliberate action, the q205/q208 disclosure); the EM rounds and
@@ -377,16 +375,15 @@ def fs_classify(spark, flags: DataFrame, *, ordered: bool = True) -> DataFrame:
     disclosed: checkpointed partitions are not recomputable on
     executor loss (the operators/graph.py per-round caveat) — for a
     lost-task-restarts-the-query batch report that is the right
-    trade at any scale. Read-side streaming finishers (#35-#37) pass
-    state-table-sized frames where the checkpoint is equally safe.
+    trade at any scale.
 
     ``ordered=False`` skips the report ORDER BY for composing
     consumers (the q214/q215 er tier): their filter → components →
     aggregate tail is order-independent, while the sort is a global
     pairs-grain range exchange that rode along once per plan
     reference (measured r13: two copies inside q214's final union
-    plus one under the component probe). The REPORT queries (q208,
-    twin #35) keep the ordered output contract — their result is the
+    plus one under the component probe). The REPORT query (q208)
+    keeps the ordered output contract — their result is the
     ordered pair table itself."""
     gcols = fs_census_flag_cols()
     flags = flags.localCheckpoint(eager=False)
@@ -421,8 +418,7 @@ def er_entities(classified: DataFrame) -> DataFrame:
     closure over the sparse link graph (the shared
     ``operators/graph.connected_components``), one row per entity
     with the component-min canonical id, size, n_merged and an exact
-    membership checksum. ONE assembly shared by batch q214 and
-    streaming twin #36's finisher. ``possible`` pairs go to clerical
+    membership checksum (q214). ``possible`` pairs go to clerical
     review in the Fellegi-Sunter decision model — never auto-merge."""
     return (
         er_members(classified)
@@ -456,8 +452,7 @@ def er_golden_records(classified: DataFrame, docs: DataFrame) -> DataFrame:
       — the "most frequent attribute" rule;
     - ``size`` / ``sum_chars``: merge census + an exact checksum.
 
-    ONE assembly shared by batch q215 and streaming twin #37's
-    finisher. 100 TB shape: the member table is link-graph-sized
+    The q215 assembly. 100 TB shape: the member table is link-graph-sized
     (near-dup-sparse), so it BROADCASTS onto the corpus scan — the
     corpus is probed once by a broadcast hash join and never
     shuffles; every window/agg downstream runs on member-sized data.

@@ -1,14 +1,11 @@
-"""Shared data-quality audit semantics (batch q112 ≡ its streaming
-twin — the one-source-of-truth pattern of functions/histogram.py and
-functions/trends.py).
+"""Data-quality audit semantics of q112.
 
 The Deequ-style audit is 9 metrics over lineitem: 7 row-level
 conditional aggregates (completeness / validity), one uniqueness
 count over the natural key, and one referential-integrity count
 against orders. The 7 scan metrics are merge-closed conditional
-sums/counts, so batch and streaming compute them from the SAME
-expression list below; the reshape to the tall (metric, value)
-report is also shared. Reference analog: the sanity/health range
+sums/counts computed from the expression list below; the reshape to
+the tall (metric, value) report lives here too. Reference analog: the sanity/health range
 checks the reference runs before publishing
 (/root/reference/polla_app/pipeline.py health path).
 """

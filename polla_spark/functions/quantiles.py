@@ -1,6 +1,4 @@
-"""Shared KLL quantile-sketch verification kernel — batch q202 ≡ its
-streaming twin (the one-source-of-truth pattern of functions/kmv.py /
-bloom.py / cmsketch.py).
+"""KLL quantile-sketch verification kernel of q202.
 
 Spark's ``percentile_approx``/``approx_percentile`` is backed by a
 KLL-family mergeable sketch (Karnin–Lang–Liberty lineage via the
@@ -20,11 +18,10 @@ value's exact rank window ``[count(x<v), count(x<=v)]`` and the query
 ABORTS unless ``p·n`` falls inside it ± ``n/acc + 1``. The same
 verifier runs over
 
-- the natural-partitioning batch sketch,
+- the natural-partitioning sketch and
 - an ADVERSARIAL merge order (value-range-sorted runs — each
   partition a contiguous value range, the classic worst case for
-  rank-sketch merging), and
-- the streaming twin's micro-batch-merged sketch (twin #29),
+  rank-sketch merging),
 
 so "mergeable within the documented bound under ANY merge order" is
 a pinned property, not prose.
@@ -47,9 +44,7 @@ def approx_group_quantiles(
     acc: int = QUANTILE_ACC,
 ) -> DataFrame:
     """(key, n, pct, v): one mergeable-sketch aggregation, exploded to
-    a row per requested percentile. Works identically as a batch
-    groupBy or a streaming complete/update-mode aggregation (the KLL
-    buffer IS the streaming state — probed in tests/test_streaming.py)."""
+    a row per requested percentile."""
     pcts = QUANTILE_PCTS if pcts is None else pcts
     return (
         fact.groupBy(key)

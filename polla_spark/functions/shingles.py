@@ -1,8 +1,7 @@
 """Token / 3-token-shingle set geometry — ONE definition shared by
 every set-similarity, containment, cover and record-linkage query in
-plans/llmdata.py AND the streaming twins that must reproduce the
-identical sets (functions/linkage.py census kernel), so a geometry
-change (k, null handling, tokenizer) cannot desynchronize them.
+plans/llmdata.py, so a geometry change (k, null handling, tokenizer)
+cannot desynchronize them.
 
 Tokenizer = raw-text ``split('\\s+')`` — NOT lowercased (the
 production TOKS geometry; its DuckDB twin is llmdata's

@@ -1,6 +1,4 @@
-"""Shared duplicate-span semantics (batch q189 ≡ its streaming
-twin — the one-source-of-truth pattern of functions/bloom.py /
-cmsketch.py / diversity.py).
+"""Duplicate-span semantics of q189.
 
 ExactSubstr-style substring dedup (Lee et al., "Deduplicating
 Training Data Makes Language Models Better") distributed as a
@@ -9,12 +7,10 @@ times anywhere in the corpus; per-doc coverage is the union of the
 [pos, pos+k) intervals of duplicated gram starts (q153's sweep
 specialised to equal-length intervals).
 
-The census is a plain COUNT on the md5 gram key — merge-closed, so a
-streamed build over any micro-batch cut equals a one-shot batch
-census EXACTLY, provided each DOCUMENT arrives whole (grams span
-k-token windows, so splitting one doc's text across batches would
-change its grams — unlike q186's char census, this twin's unit of
-atomicity is the document, stated in tests). The census IS the state
+The census is a plain COUNT on the md5 gram key — merge-closed over
+any partitioning that keeps each DOCUMENT whole (grams span k-token
+windows, so splitting one doc's text would change its grams). The
+census IS the state
 of any incremental substring-dedup index — gram-keyed and corpus-
 sized, the same storage tier as q97's hash index, not a fixed-size
 sketch.
@@ -57,8 +53,7 @@ def gram_stream(docs: DataFrame) -> DataFrame:
 
 def gram_census(docs: DataFrame) -> DataFrame:
     """Corpus gram census (g, n_occ): ONE partial-agged count shuffle
-    on the uniform md5 key — identical as a batch groupBy or a
-    streaming update-mode aggregation (counts merge)."""
+    on the uniform md5 key (counts merge)."""
     return gram_stream(docs).groupBy("g").agg(
         F.count("*").cast("long").alias("n_occ")
     )

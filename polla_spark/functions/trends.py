@@ -1,8 +1,4 @@
-"""Shared month-grain trend algebra: ONE source of truth for the
-batch plan (q122) and its streaming twin
-(``streaming/windows.monthly_revenue_partials`` /
-``finish_monthly_growth``) — the ``functions/events.py`` /
-``functions/histogram.py`` drift-killing pattern.
+"""Month- and day-grain trend algebra of q122 and q193.
 
 The kernel: period-over-period growth where the only data-sized stage
 is a mergeable partial agg to month grain; the ``lag`` window runs on
@@ -16,10 +12,8 @@ from pyspark.sql import functions as F
 
 
 def monthly_census(orders: DataFrame) -> DataFrame:
-    """Month-grain revenue census in exact integer cents. Mergeable —
-    identical as a batch partial agg and as a streaming update-mode
-    aggregation (cent sums are non-negative, so they grow
-    monotonically across micro-batches)."""
+    """Month-grain revenue census in exact integer cents. Mergeable,
+    so map-side partial aggregation applies."""
     return orders.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
             "month"
@@ -51,10 +45,8 @@ def growth_report(monthly: DataFrame) -> DataFrame:
 
 def daily_type_census(events: DataFrame) -> DataFrame:
     """Day-grain revenue census per event_type in exact integer cents
-    — q193's only data-sized stage, shared with its streaming twin.
-    Mergeable: cent sums over positive values grow monotonically
-    across micro-batches, so update-mode rows collapse with ``max``
-    exactly like :func:`monthly_census`."""
+    — q193's only data-sized stage. Mergeable like
+    :func:`monthly_census`."""
     return events.groupBy(
         "event_type",
         F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("day"),

@@ -144,10 +144,10 @@ def merge_components(
     max_rounds: int = 20,
 ) -> DataFrame:
     """Fold a DELTA edge set into an existing component labeling —
-    the incremental-maintenance tier downstream of the stateful LSH
-    pair stream (twin #42): batch ``connected_components`` recomputes
-    the clustering from scratch; a real incremental crawl folds each
-    micro-batch's new candidate pairs into the standing label table.
+    the incremental-maintenance tier of q237/q239:
+    ``connected_components`` recomputes the clustering from scratch;
+    an incremental crawl folds each batch's new candidate pairs into
+    the standing label table.
 
     ``labels``: (node, label) with label = component min, valid for
     the already-seen graph. ``new_edges``: (src, dst) delta pairs —

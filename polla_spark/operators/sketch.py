@@ -95,8 +95,9 @@ def mg_merge(partials: DataFrame, k: int = 64) -> DataFrame:
 
     NOTE: this makes the function EAGER — calling it executes the
     upstream pass immediately, and the input must be a BATCH frame
-    (a streaming frame cannot be collected; stream via
-    ``heavy_hitter_partials`` and merge at read time instead)."""
+    (a streaming frame cannot be collected; stream ``mg_partials``
+    through :func:`heavy_hitter_foreach_batch` and merge at read time
+    instead)."""
     spark = partials.sparkSession
     rows = partials.groupBy("key").agg(F.sum("est").alias("est")).collect()
     rows.sort(key=lambda r: (-r["est"], r["key"]))
@@ -223,8 +224,9 @@ def compact_heavy_hitters(spark, sink_path: str, k: int = 64) -> int:
     partitions × k rows) with their own merged summary (≤ k rows).
     Re-merging merged summaries is exactly what PODS'12 mergeability
     licenses, so the n/(k+1) guarantee survives ANY number of
-    compaction cycles — this bounds the documented sink growth of
-    ``streaming/windows.heavy_hitter_partials``.
+    compaction cycles — this bounds the sink growth of
+    :func:`heavy_hitter_foreach_batch` (at most partitions × k
+    candidate rows per trigger).
 
     Crash-safety (r5 self-review, both passes): the merged summary is
     written to a NEW directory first, then the manifest is atomically

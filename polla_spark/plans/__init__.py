@@ -108,7 +108,7 @@ def registry() -> dict[str, Query]:
     (~50 queries/round, run in registry order):
 
     1. Base order ROUND-ROBINS across the family modules (relational,
-       consensus, llm-data, windows/streaming) rather than
+       consensus, llm-data, windows) rather than
        concatenating them, so any truncated sweep samples every
        family instead of grading one module and skipping the rest.
     2. A stable sort then orders by the NEWEST driver round each

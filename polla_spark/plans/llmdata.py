@@ -26,8 +26,7 @@ from .relational import t
 
 TOKS = "regexp_split_to_array(text, '\\s+')"  # duckdb side tokenizer
 
-# tokenizer + shingle geometry moved to functions/shingles.py (r8) so
-# the streaming census twin can share it without importing plans —
+# tokenizer + shingle geometry live in functions/shingles.py (r8);
 # these aliases keep llmdata the query-side name
 _toks = shingles.toks
 
@@ -207,7 +206,7 @@ def with_minhash(d: DataFrame) -> DataFrame:
 def minhash_bands(docs: DataFrame) -> DataFrame:
     """(doc_id, sig) with one row per MinHash band: the unpivoted
     signature table every LSH consumer joins or groups on (q53's
-    family, q67, q227, q237/q239, q238, streaming twin #42)."""
+    family, q67, q227, q237/q239, q238)."""
     return with_minhash(docs).select(
         "doc_id", "mh0", "mh1", "mh2", "mh3"
     ).selectExpr("doc_id", "stack(4, mh0, mh1, mh2, mh3) as sig")
@@ -2362,9 +2361,7 @@ def q199_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bpe_word_census_from(docs: DataFrame) -> DataFrame:
     """(w, cnt) census of lowercase-alpha words from a documents-shaped
-    frame — ONE definition shared by the batch census and streaming
-    twin #38's partials (counts are plain merge-closed sums, so the
-    streamed census over any micro-batch cut equals the batch one)."""
+    frame (q223's census)."""
     return (
         docs.select(F.explode(_toks()).alias("w"))
         .filter(F.col("w").rlike("^[a-z]+$"))
@@ -2608,10 +2605,8 @@ def q223_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bpe_fertility_report(spark: SparkSession, census: DataFrame) -> DataFrame:
-    """q223's train→apply→evaluate tail over a (w, cnt) census — ONE
-    assembly shared by batch q223 and streaming twin #38's finisher
-    (the fs_em_report discipline: the fertility definition cannot
-    drift between transports). The census is persisted here; it feeds
+    """q223's train→apply→evaluate tail over a (w, cnt) census. The
+    census is persisted here; it feeds
     the training slice and the application pass. Like q210's builder
     materialization (and _aps_postings), the persist is
     plan-lifetime by design — it cannot be unpersisted inside the
@@ -4160,10 +4155,9 @@ def q183_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     remainder is what q97's exact path re-checks downstream — the
     classic two-tier design.
 
-    Position/word/probe kernels come from ``functions/bloom.py`` —
-    shared with the streaming twin (``bit_or`` is idempotent-merge-
-    closed, so the streamed word table equals this batch one
-    EXACTLY).
+    Position/word/probe kernels come from ``functions/bloom.py``
+    (``bit_or`` is idempotent-merge-closed, so any partitioning builds
+    the same word table).
     """
     from ..functions.bloom import bloom_probe, bloom_word_table
 
@@ -4374,8 +4368,7 @@ def q186_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, ch) census + a doc-grain sum — two partial-agged
     shuffles whose keys are uniform. Report = 15 least-diverse docs,
     deterministically tie-broken. Census + report live in
-    ``functions/diversity.py`` — shared with the streaming twin
-    (counts are merge-closed, so the streamed census is exact).
+    ``functions/diversity.py``.
     """
     from ..functions.diversity import char_census, simpson_report
 
@@ -4488,9 +4481,8 @@ def q188_countmin_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan asserts it per probe via ``F.assert_true`` — an estimate
     below truth is an implementation regression, never sketch noise.
     The exact census here exists only to verify/report; production
-    builds the sketch alone. Kernels in ``functions/cmsketch.py`` —
-    shared with the streaming twin (counters are merge-closed sums,
-    so the streamed sketch equals this batch one EXACTLY).
+    builds the sketch alone. Kernels in ``functions/cmsketch.py``
+    (counters are merge-closed sums).
 
     r12: this verify/report query pays the exact census ANYWAY, so
     the census is persisted (vocab-bounded — the BPE word-census
@@ -4503,7 +4495,7 @@ def q188_countmin_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     explodes in plans/r12/q188_countmin_frequency_before.txt); now
     the corpus is tokenized exactly once and everything downstream
     is vocab-grain cache reads. The production sketch-only path
-    (``cm_sketch``, the streaming twin) is untouched — its
+    (``cm_sketch``) is untouched — its
     cardinality-independent shuffle story is the kernel's, not this
     report's. Composing callers running many plans should
     ``spark.catalog.clearCache()`` when done (the bench does between
@@ -4594,10 +4586,8 @@ def q189_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform; nothing is pairwise. Report: the 20 most-duplicated docs
     by ppm coverage (exact integer floor-div — engine-identical).
 
-    Kernels live in ``functions/spans.py`` — shared with the
-    streaming twin (the census is a merge-closed count, so a streamed
-    census over whole-doc micro-batches equals this batch one
-    EXACTLY).
+    Kernels live in ``functions/spans.py`` (the census is a
+    merge-closed count over whole-doc partitions).
     """
     from ..functions.spans import gram_census, gram_stream, span_report, token_spine
 
@@ -4787,9 +4777,8 @@ def q191_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     minima so a real lang named 'ALL' aborts loudly instead of
     silently folding into the union row. The exact census
     here exists only to report the signed error; production builds
-    the sketch alone. Kernels in ``functions/kmv.py`` — shared with
-    the streaming twin (per-key minima lists merge losslessly, so the
-    streamed sketch equals this batch one EXACTLY).
+    the sketch alone. Kernels in ``functions/kmv.py`` (per-key
+    minima lists merge losslessly).
 
     est = n_kept (exact) when a scope has < K distinct hashes;
     accuracy otherwise is the statistical RSE ≈ 1/√(K-2) ≈ 6.3% —
@@ -4946,7 +4935,7 @@ def q203_kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     minima = kmv_minima(sh).persist()
-    est = kmv_set_algebra(minima)  # the shared kernel (twin #30 finisher)
+    est = kmv_set_algebra(minima)
     # exact truth for the signed-error report
     x, y = sh.alias("x"), sh.alias("y")
     tru = (
@@ -5418,8 +5407,7 @@ ORDER BY asset_id
 def _fs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared record-linkage input frame: documents + shingle set
     (jac field) + title-prefix bigram set (bg field) — one definition
-    for q206/q207/q208 and streaming twin #32 (set geometry lives in
-    functions/linkage.py)."""
+    for q206/q207/q208 (set geometry lives in functions/linkage.py)."""
     return LK.with_bigram_set(
         _with_shingle_sets(t(spark, sf_dir, "documents"))
     ).select("doc_id", "lang", "source", "n_chars", "sh", "bg")
@@ -5552,7 +5540,7 @@ def q207_fs_em_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1e30, ×1e6 = 1e36) and divides identically in both engines — so
     the trained parameters are oracle-EXACT, not approximately equal.
     Algebra + oracle generators live in functions/linkage.py (shared
-    with q208 and streaming twin #32).
+    with q208).
 
     100 TB shape: the data-sized work is ONE candidate census down to
     ≤16 (pattern, count) rows (inheriting q206/q128's single-exchange
@@ -5631,8 +5619,7 @@ def _fs_trained_classified(
         *LK.fs_flag_cols(),
     )
     # census -> EM -> posterior -> broadcast classification lives in
-    # functions/linkage.fs_classify — ONE assembly shared with
-    # streaming twin #35's finisher (census materialized driver-side,
+    # functions/linkage.fs_classify (census materialized driver-side,
     # ≤16 rows: nothing data-sized is ever persisted — ADVICE r8)
     return LK.fs_classify(spark, flags, ordered=ordered)
 
@@ -5793,10 +5780,10 @@ def _lloyd_update_arrow(
     coded: DataFrame, cents: list[tuple[int, list[int]]]
 ) -> DataFrame:
     """The whole Lloyd round (assignment + update census) as ONE
-    Arrow kernel — the r12 shared definition behind batch q212 and
-    streaming twin #39 (``_lloyd_assign`` → ``_lloyd_update_plan``
-    stays as the expression-level reference the kernel is pinned
-    against in tests/test_lloyd.py).
+    Arrow kernel — the r12 definition behind q212
+    (``_lloyd_assign`` → ``_lloyd_update_plan`` stays as the
+    expression-level reference the kernel is pinned against in
+    tests/test_lloyd.py).
 
     Why (guide §1.2/§4.2, measured r12): the unrolled JVM assignment
     builds K zip_with+aggregate lambda trees over 64-element arrays —
@@ -5817,8 +5804,7 @@ def _lloyd_update_arrow(
     first-match CASE; per-task sums are int64 partials reduced by
     the same commutative sum agg (empty clusters emit no partial,
     matching the explode→groupBy shape). The downstream reducer is
-    unchanged, so the streaming twin's merge-closure argument
-    (finish_lloyd_round) holds verbatim."""
+    unchanged."""
     import numpy as np
 
     ordered = sorted(cents)
@@ -6307,8 +6293,7 @@ def q214_er_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/graph.connected_components`` scale path q204 uses —
     local union-find under the threshold, distributed label
     propagation above it. The verdicts→entities assembly lives in
-    ``functions/linkage.er_entities``, shared with streaming twin
-    #36's finisher.
+    ``functions/linkage.er_entities``.
     """
     return LK.er_entities(
         _fs_trained_classified(spark, sf_dir, ordered=False)
@@ -6354,8 +6339,7 @@ def q215_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     link-graph-sized (near-dup-sparse), so it broadcasts back onto
     the documents scan — the corpus is probed once and never
     shuffles; all survivorship windows/aggs run on member-sized
-    data. Assembly in ``functions/linkage.er_golden_records``,
-    shared with streaming twin #37's finisher.
+    data. Assembly in ``functions/linkage.er_golden_records``.
     """
     return LK.er_golden_records(
         _fs_trained_classified(spark, sf_dir, ordered=False),
@@ -7778,7 +7762,7 @@ def pct_features_from(docs: DataFrame) -> DataFrame:
     the integer feature vector (1, n_toks, stop_n, n_chars) and the
     label y = +1 for lang='en' else -1 (NULL lang folded to -1, the
     q221 discipline). All-integer so the whole training loop is
-    engine-exact. Shared by batch q224 and streaming twin #40."""
+    engine-exact."""
     d = docs.withColumn("_toks", _toks())
     return d.select(
         F.when(F.coalesce(F.col("lang"), F.lit("")) == "en", 1)
@@ -7950,9 +7934,7 @@ def dsir_bigrams_from(docs: DataFrame) -> DataFrame:
 
 def dsir_census_from(docs: DataFrame) -> DataFrame:
     """q225's per-bucket (b, cr, ct) census — raw count + conditional
-    target count, merge-closed over the fixed 256-bucket space; ONE
-    definition shared by batch q225 and streaming twin #45 (both
-    counts monotone; no division, streaming-legal in update mode)."""
+    target count, merge-closed over the fixed 256-bucket space."""
     return dsir_bigrams_from(docs).groupBy("b").agg(
         F.count("*").alias("cr"),
         F.sum(
@@ -7965,8 +7947,7 @@ def dsir_weight_table(census: DataFrame) -> DataFrame:
     """q225's census-side weight table (b, w_ppm) — totals via a
     census-side global window (≤256 rows in a SinglePartition, the
     q230/q123 rule: an agg branch would rescan the corpus), then the
-    exact linearized likelihood-ratio rational. Shared with twin
-    #45's finisher."""
+    exact linearized likelihood-ratio rational."""
     w = Window.partitionBy()
     return (
         census.withColumn("tr", F.sum("cr").over(w).cast("long"))
@@ -7984,9 +7965,7 @@ def dsir_weight_table(census: DataFrame) -> DataFrame:
 
 def dsir_report(docs: DataFrame, wt: DataFrame) -> DataFrame:
     """q225's scoring pass: broadcast the 256-row weight table onto
-    the bigram stream, doc-grain importance agg, top-k. Shared with
-    twin #45's finisher (which scores the full static corpus against
-    the streamed census's weight table)."""
+    the bigram stream, doc-grain importance agg, top-k."""
     return (
         dsir_bigrams_from(docs)
         .join(F.broadcast(wt), "b")
@@ -8068,8 +8047,7 @@ def q226_source_quality_lcb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def source_quality_census_from(docs: DataFrame) -> DataFrame:
-    """q226's (source, n_docs, n_pass) census — merge-closed counts,
-    ONE definition shared by batch q226 and streaming twin #41."""
+    """q226's (source, n_docs, n_pass) census — merge-closed counts."""
     d = docs.withColumn("_toks", _toks())
     n_toks = F.size("_toks")
     stop_n = F.size(F.filter("_toks", lambda x: x.isin(*_EN_STOP)))
@@ -8089,8 +8067,7 @@ def source_quality_census_from(docs: DataFrame) -> DataFrame:
 
 
 def source_quality_leaderboard(census: DataFrame) -> DataFrame:
-    """q226's census-side Wilson-LCB arithmetic + ordering (shared
-    with streaming twin #41's finisher).
+    """q226's census-side Wilson-LCB arithmetic + ordering.
 
     Every intermediate that can pass BIGINT runs in DECIMAL(38,0)
     (oracle: HUGEINT) — including the floor-divisions, which on
@@ -8256,10 +8233,7 @@ def q229_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_drift_census_from(vecs: DataFrame) -> DataFrame:
     """q229's (is_new, pos, s127, n) census — merge-closed sums over
-    a fixed 2×64-key space, ONE definition shared by batch q229 and
-    streaming twin #43 (it contains no division, so it is
-    streaming-legal in update mode; n is the monotone pair of
-    s127)."""
+    a fixed 2×64-key space."""
     coded = vecs.select("vec_id", _quant(F.col("embedding")).alias("qe"))
     return (
         coded.select(
@@ -8275,19 +8249,17 @@ def embedding_drift_census_from(vecs: DataFrame) -> DataFrame:
 
 
 def embedding_drift_report(census: DataFrame) -> DataFrame:
-    """q229's census-side means + old/new pivot + report (shared with
-    streaming twin #43's finisher): everything here runs on ≤ 2×64
-    census rows."""
+    """q229's census-side means + old/new pivot + report: everything
+    here runs on ≤ 2×64 census rows."""
     per = census.select(
         "is_new", "pos", F.expr("s127 * 1000000 div n").alias("mean127_ppm")
     )
     old = per.filter(F.col("is_new") == 0).select(
         "pos", F.col("mean127_ppm").alias("old_mean127_ppm")
     )
-    # distinct join-key name: both branches read the SAME relation
-    # (in the streaming twin it is one memory-sink view, whose
-    # attribute ids are identical on both sides — a bare self-join on
-    # "pos" fails analysis with conflicting references there)
+    # distinct join-key name: both branches read the SAME relation,
+    # and a bare self-join on "pos" can fail analysis with
+    # conflicting references
     new = per.filter(F.col("is_new") == 1).select(
         F.col("pos").alias("pos_new"),
         F.col("mean127_ppm").alias("new_mean127_ppm"),
@@ -8355,8 +8327,7 @@ def q230_length_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def length_census_from(docs: DataFrame) -> DataFrame:
     """q230's per-bucket (ca, cb) census — merge-closed counts over
-    a fixed ≤{_DRIFT_BUCKETS}-key space, ONE definition shared by
-    batch q230 and streaming twin #44 (both counts are monotone)."""
+    a fixed ≤{_DRIFT_BUCKETS}-key space."""
     d = docs.select(
         (F.pmod("doc_id", F.lit(3)) == 0).cast("int").alias("is_new"),
         # integer div on BOTH sides: DuckDB's CAST(float AS INTEGER)
@@ -8373,8 +8344,7 @@ def length_census_from(docs: DataFrame) -> DataFrame:
 
 
 def length_drift_report(per: DataFrame) -> DataFrame:
-    """q230's census-side totals + exact chi-square rational (shared
-    with streaming twin #44's finisher)."""
+    """q230's census-side totals + exact chi-square rational."""
     # totals via a census-side global window (<= _DRIFT_BUCKETS rows
     # in a SinglePartition — data-size-independent, the q123 rule):
     # a separate agg branch would RESCAN the corpus for the totals
@@ -8566,9 +8536,7 @@ def q231_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def quality_hist_from(docs: DataFrame) -> DataFrame:
     """q231's per-(lang, score_ppm) histogram — merge-closed doc and
-    token counts, ONE definition shared by batch q231 and streaming
-    twin #46 (both counts monotone; no division past the within-row
-    score, streaming-legal in update mode)."""
+    token counts."""
     d = (
         docs.filter(F.col("text").isNotNull())
         .withColumn("_toks", _toks())
@@ -8592,9 +8560,8 @@ def quality_hist_from(docs: DataFrame) -> DataFrame:
 
 
 def quality_tertiles_report(hist: DataFrame) -> DataFrame:
-    """q231's histogram-side tertile bucketing + report (shared with
-    streaming twin #46's finisher) — everything here runs on
-    histogram rows."""
+    """q231's histogram-side tertile bucketing + report — everything
+    here runs on histogram rows."""
     w = (
         Window.partitionBy("lang")
         .orderBy(F.desc("score_ppm"))
@@ -8668,8 +8635,7 @@ def q232_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffles), a term-keyed self-join whose output is bounded by
     |V|·S² for S sources (S is small and fixed), and source-pair-
     sized arithmetic. The exact-set analog of the q219 sketch
-    calibrations. Kernel shared ONE-definition with streaming twin
-    #49 (``source_term_census_from`` / ``vocab_overlap_report``)."""
+    calibrations."""
     return vocab_overlap_report(
         source_term_census_from(t(spark, sf_dir, "documents")).select(
             "source", "term"
@@ -8678,12 +8644,9 @@ def q232_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def source_term_census_from(docs: DataFrame) -> DataFrame:
-    """q232's per-(source, term) census — merge-closed counts, ONE
-    definition shared by batch q232 and streaming twin #49 (the
-    count makes the streamed distinct merge-closed: a key exists iff
-    its cnt > 0, and cnt is monotone). State disclosure for the
-    twin: |sources| × vocabulary keys — Heaps-sublinear in the
-    corpus (the twin-#38 word-table class), never doc-sized."""
+    """q232's per-(source, term) census — merge-closed counts over
+    |sources| × vocabulary keys: Heaps-sublinear in the corpus,
+    never doc-sized."""
     return (
         docs.filter(F.col("text").isNotNull())
         .withColumn("tk", _toks())
@@ -8694,11 +8657,8 @@ def source_term_census_from(docs: DataFrame) -> DataFrame:
 
 
 def vocab_overlap_report(sv: DataFrame) -> DataFrame:
-    """q232's report tail over the DISTINCT (source, term) table —
-    shared verbatim by batch q232 and twin #49's finisher (which
-    must localCheckpoint its memory-sink-backed input first — Spark
-    4's self-join attribute dedup fails on a shared View leaf; the
-    rename-before-join below handles the ordinary ambiguity)."""
+    """q232's report tail over the DISTINCT (source, term) table (the
+    rename-before-join below handles the self-join ambiguity)."""
     vs = sv.groupBy("source").agg(F.count("*").cast("long").alias("v"))
     inter = (
         sv.select(F.col("source").alias("source_a"), "term")
@@ -8858,9 +8818,7 @@ def q234_zipf_head_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def term_census_from(docs: DataFrame) -> DataFrame:
     """q234's unigram term census — a merge-closed count over the
-    Heaps-sublinear vocabulary, ONE definition shared by batch q234
-    and streaming twin #47 (state is vocabulary-bounded, the twin
-    #38 BPE-census disclosure class)."""
+    Heaps-sublinear vocabulary."""
     return (
         docs.filter(F.col("text").isNotNull())
         .withColumn("tk", _toks())
@@ -8871,8 +8829,7 @@ def term_census_from(docs: DataFrame) -> DataFrame:
 
 
 def zipf_head_report(census: DataFrame) -> DataFrame:
-    """q234's census-side top-K + shares (shared with twin #47's
-    finisher)."""
+    """q234's census-side top-K + shares."""
     tot = census.agg(F.sum("cnt").cast("long").alias("tot"))
     top = (
         census.orderBy(F.desc("cnt"), "term").limit(_ZIPF_TOPK)
@@ -8939,10 +8896,9 @@ def q235_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT-join it on the bigram key, and the doc-grain agg +
     TakeOrdered are delta-sized. Per-doc bigram dedup is ROW-LOCAL
     (array_distinct before the explode — r12: replaces the old
-    corpus-wide DISTINCT exchange with per-row work, and is what
-    makes streaming twin #50 stateless-joinable). Kernels shared
-    ONE-definition with the twin (``bigram_rows_from`` /
-    ``novelty_partials_from`` / ``novelty_report``)."""
+    corpus-wide DISTINCT exchange with per-row work). Kernels:
+    ``bigram_rows_from`` / ``novelty_partials_from`` /
+    ``novelty_report``."""
     docs = t(spark, sf_dir, "documents")
     bg = bigram_rows_from(docs)
     old_vocab = (
@@ -8958,8 +8914,7 @@ def q235_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bigram_rows_from(docs: DataFrame) -> DataFrame:
     """q235's per-doc DISTINCT bigram rows — dedup is row-local
     (array_distinct inside the row, then explode), so the table
-    needs no corpus-wide exchange and streams stateless. ONE
-    definition shared by batch q235 and streaming twin #50."""
+    needs no corpus-wide exchange."""
     return (
         docs.filter(F.col("text").isNotNull())
         .withColumn("tk", _toks())
@@ -8980,10 +8935,7 @@ def bigram_rows_from(docs: DataFrame) -> DataFrame:
 def novelty_partials_from(delta_docs: DataFrame, old_vocab: DataFrame) -> DataFrame:
     """q235's per-doc (n_bigrams, n_novel) partials: the delta's
     distinct bigrams LEFT-join the (static, Heaps-sublinear) history
-    vocabulary on the bigram key, then aggregate per doc. Shared by
-    batch q235 and twin #50 (where it is a stream-static join — the
-    history vocabulary is static by construction; a doc's bigrams
-    all arrive in its one row, so both counts land in one update)."""
+    vocabulary on the bigram key, then aggregate per doc."""
     return (
         bigram_rows_from(delta_docs)
         .join(old_vocab, "term", "left")
@@ -8997,8 +8949,7 @@ def novelty_partials_from(delta_docs: DataFrame, old_vocab: DataFrame) -> DataFr
 
 
 def novelty_report(partials: DataFrame) -> DataFrame:
-    """q235's report tail — exact-ppm novelty + deterministic top-K;
-    shared verbatim by batch q235 and twin #50's finisher."""
+    """q235's report tail — exact-ppm novelty + deterministic top-K."""
     return (
         partials.select(
             "doc_id", "n_bigrams", "n_novel",
@@ -9051,9 +9002,7 @@ def q236_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cluster_size_report(comp: DataFrame) -> DataFrame:
     """q236's histogram tail over a (doc_id, component) labeling —
-    two label-table-sized aggs, ONE definition shared by batch q236
-    and streaming twin #51's finisher (which feeds it the standing
-    label table twin #48 maintains)."""
+    two label-table-sized aggs."""
     sizes = comp.groupBy("component").agg(
         F.count("*").cast("long").alias("cluster_size")
     )
@@ -9075,8 +9024,7 @@ def q237_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs into the STANDING label table. History (doc_id %
     3 != 0, the q227 snapshot convention) is clustered once with the
     shared ``connected_components`` operator; the delta batch's
-    pairs (delta×all band probes — exactly the stateful-LSH twin-#42
-    emission) then fold in through
+    pairs (delta×all band probes) then fold in through
     ``operators/graph.merge_components``, which contracts the delta
     edges to LABEL space and merges labels only. The ORACLE is the
     FULL recompute (O67's recursive transitive closure over the
@@ -9140,13 +9088,11 @@ _CAP_GRID = (2, 4, 8, 16)
 
 
 def q238_capped_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capped-LSH RECALL AUDIT — prices the ``max_bucket`` knob the
-    stateful twin-#42 kernel exposes (freeze-at-cap hot-bucket
-    guard): for each candidate cap, how many of the FULL band-join
-    candidate pairs survive when every band bucket keeps only its
-    first ``cap`` members (doc_id arrival order — exactly the
-    kernel's policy on an ordered stream, pinned equivalent in
-    tests/test_stateful.py). A pair survives at cap c iff SOME
+    """Capped-LSH RECALL AUDIT — prices a freeze-at-cap hot-bucket
+    guard for incremental LSH: for each candidate cap, how many of
+    the FULL band-join candidate pairs survive when every band bucket
+    keeps only its first ``cap`` members (doc_id arrival order). A
+    pair survives at cap c iff SOME
     shared bucket holds both members at rank ≤ c, so the per-pair
     statistic is mincap = MIN over shared buckets of
     GREATEST(rank_a, rank_b), computed once — the cap grid then
@@ -9673,8 +9619,8 @@ QUERIES = [
     Query("q238_capped_lsh_recall", q238_capped_lsh_recall, O238,
           "capped-LSH recall audit: per width-budget cap, the "
           "candidate pairs kept/lost when every band bucket keeps "
-          "its first cap members (the twin-#42 max_bucket policy, "
-          "kernel-pinned); per-pair mincap computed once, the grid "
+          "its first cap members (a freeze-at-cap policy); per-pair "
+          "mincap computed once, the grid "
           "reads off counts"),
     Query("q239_component_churn", q239_component_churn, O239,
           "incremental-clustering churn audit: relabeled-history "

@@ -1785,9 +1785,7 @@ def q112_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The report itself is metric-count-sized.
 
     Metric expressions and the tall reshape are imported from
-    ``functions/quality.py`` — shared with the streaming twin
-    (``streaming/windows.quality_scan_partials``), one source of
-    truth for the audit semantics.
+    ``functions/quality.py``.
     """
     from ..functions.quality import melt_metrics, scan_metric_aggs, scan_metric_names
 
@@ -2287,9 +2285,7 @@ def q130_histogram_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct cents) → one exchange on (segment, cents) → tiny window
     on segment → final agg. Data never sorts.
 
-    Census + finisher live in ``functions/histogram.py``, shared with
-    the streaming twin (``streaming/windows.histogram_median_partials``)
-    — one source of truth for the semantics, two engines.
+    Census + finisher live in ``functions/histogram.py``.
     """
     from ..functions.histogram import cents_histogram, histogram_rank_report
 
@@ -4475,7 +4471,7 @@ def q178_approx_percentile_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
     ap = approx_group_quantiles(o, "o_orderstatus", "o_totalprice", [0.5, 0.9], acc)
     # shared sketch-verification kernel (functions/quantiles.py — also
-    # q202 and streaming twin #29): exact-rank census + in-plan abort
+    # q202): exact-rank census + in-plan abort
     return (
         rank_bound_verify(ap, o, "o_orderstatus", "o_totalprice", acc, tag="q178")
         .select(
@@ -4507,8 +4503,7 @@ def q202_quantile_merge_order(spark: SparkSession, sf_dir: str) -> DataFrame:
       totally disjoint, ordered mass),
 
     then verifies BOTH against the exact rank census via the shared
-    kernel (functions/quantiles.rank_bound_verify — also the
-    streaming twin #29's finisher) which ABORTS in-plan on any
+    kernel (functions/quantiles.rank_bound_verify) which ABORTS in-plan on any
     violation. Report: per (flag, pct) both sketch values and their
     exact-rank windows — values may legitimately differ (sketch
     output is merge-order-dependent, hence rows-only), the GUARANTEE

@@ -1,21 +1,32 @@
-"""Time-window aggregations over the events table (batch forms).
-
-Each has a streaming twin in polla_spark.streaming verified
-streaming==batch in tests; the batch form is what the DuckDB oracle
-checks. Window starts are emitted as formatted strings; float values
-are floor-quantized to BIGINT so sums are exact and order-independent.
+"""Time-window aggregations over the events table, each checked
+against its DuckDB oracle. Window starts are emitted as formatted
+strings; float values are floor-quantized to BIGINT (:func:`VQ`) so
+sums are exact and order-independent.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import Query
 from .relational import t
 
 FMT = "yyyy-MM-dd HH:mm:ss"
-VQ = lambda: F.floor(F.col("value") * 100).cast("long")  # noqa: E731
+
+
+def VQ() -> Column:  # noqa: N802
+    """Exact integer-cent quantization of ``events.value``.
+
+    NaN policy (r5 self-review): events.value is contractually
+    non-null/non-NaN typed data, and a NaN here FAILS FAST (ANSI
+    ``CAST(NaN AS LONG)`` aborts the query), because silent
+    corruption of a metric column should stop a pipeline, unlike
+    scraped-text parse errors, which this engine turns into data
+    columns. The ONE deliberate exception is the q150 balance family
+    (``functions/events.balance_delta_col``), whose reference
+    semantics define null/NaN purchases as 0."""
+    return F.floor(F.col("value") * 100).cast("long")
 
 
 def q70_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,15 +234,9 @@ ORDER BY day ASC NULLS FIRST, hour ASC NULLS FIRST
 
 
 def q103_first_seen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of the streaming exact-dedupe
-    (streaming/windows.py ``dedupe_stream``: watermarked
-    ``dropDuplicates`` keeps the FIRST event per key): one survivor
-    per (user_id, event_type), earliest ts wins with event_id as the
-    deterministic tie-break, then a per-type report over survivors.
-
-    The streaming twin is verified streaming==batch in
-    tests/test_streaming.py::test_dedupe_stream; this query is the
-    oracle-checked contract those semantics are held to. Plan: one
+    """First-seen exact dedupe: one survivor per (user_id,
+    event_type), earliest ts wins with event_id as the deterministic
+    tie-break, then a per-type report over survivors. Plan: one
     hash shuffle on the key for the window, one partial-aggregated
     shuffle for the report — the same two exchanges at any scale.
     """
@@ -635,8 +640,7 @@ def q122_monthly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.trends import growth_report, monthly_census
 
-    # census + report shared with the streaming twin
-    # (functions/trends.py) — one source of truth, two engines
+    # census + report live in functions/trends.py
     return growth_report(monthly_census(t(spark, sf_dir, "orders")))
 
 
@@ -786,11 +790,9 @@ def q132_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     never of the fact — and one count-distinct shuffle on report day
     finishes. At 100 TB the event table crosses the wire once; the
     expansion runs on the |users| x |days| grain, orders of magnitude
-    smaller. The extreme-scale twin swaps the final count-distinct
+    smaller. The extreme-scale form swaps the final count-distinct
     for per-day HLL sketch unions (q38's family) at the cost of
-    exactness. Streaming twin: ``streaming/windows.py
-    rolling_active_partials`` emits the same (user, day) partials
-    with bounded dedup state; this finisher runs at read time.
+    exactness.
     """
     e = t(spark, sf_dir, "events")
     active = e.select("user_id", F.to_date("ts").alias("day")).distinct()
@@ -978,8 +980,8 @@ def q147_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only merge-closed aggregates participate (count/sum/min/max merge
     as sum-of-counts, sum-of-sums, min-of-mins, max-of-maxes);
     count-distinct deliberately does NOT appear — its mergeable form
-    is the HLL sketch (q38's family) or user-grain partials
-    (streaming `daily_user_partials`). Scale shape: the history side
+    is the HLL sketch (q38's family) or user-grain partials. Scale
+    shape: the history side
     is MV-sized (days x types, not events); only the delta scans raw
     rows; the merge shuffles report-grain rows once.
     """
@@ -1047,9 +1049,7 @@ def q148_behavior_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").filter(
         F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp")
     )
-    # flags + mask + labels come from functions/events.py — the SAME
-    # expressions the streaming twin collapses, so batch and streaming
-    # cannot drift (the r3 clamped-balance defect class)
+    # flags + mask + labels come from functions/events.py
     user = e.groupBy("user_id").agg(*behavior_flag_aggs()).select(
         "user_id", behavior_mask_col().alias("mask")
     )
@@ -1102,8 +1102,7 @@ def q149_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.events import conversion_report, first_touch_aggs
 
     e = t(spark, sf_dir, "events")
-    # endpoint aggs + report shared with the streaming twin
-    # (functions/events.py) — one source of truth for the semantics
+    # endpoint aggs + report come from functions/events.py
     user = e.groupBy("user_id").agg(*first_touch_aggs())
     return conversion_report(user)
 
@@ -1148,8 +1147,7 @@ def q150_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.events import balance_delta_col
 
     e = t(spark, sf_dir, "events")
-    # the delta table lives in functions/events.py, shared with the
-    # streaming kernel's balance_delta_py — one mapping, two engines
+    # the delta table lives in functions/events.py
     delta = balance_delta_col()
     w = (
         Window.partitionBy("user_id")
@@ -1228,9 +1226,7 @@ def q193_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, day)) → window min + the five OLS sums ride ONE
     event_type exchange; the scalar combine runs on the label-sized
     report. The day census keys are uniform — no skew exposure. Census +
-    report live in ``functions/trends.py`` — shared with the
-    streaming twin (cent sums over positive values are monotone
-    across micro-batches, the q122-twin argument).
+    report live in ``functions/trends.py``.
     """
     from ..functions.trends import daily_type_census, ols_trend_report
 
@@ -1337,7 +1333,7 @@ QUERIES = [
     Query("q75_multi_grain_rollup", q75_multi_grain_rollup, O75,
           "multi-granularity GROUPING SETS rollup"),
     Query("q103_first_seen_dedup", q103_first_seen_dedup, O103,
-          "first-seen event dedup (batch contract of dedupe_stream)"),
+          "first-seen event dedup (earliest ts, event_id tie-break)"),
     Query("q108_funnel", q108_funnel, O108,
           "ordered conversion funnel (staged windows, one exchange)"),
     Query("q109_retention_cohorts", q109_retention_cohorts, O109,

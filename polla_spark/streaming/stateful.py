@@ -1,8 +1,8 @@
 """Custom stateful streaming operator: per-user sessionizer built on
 ``applyInPandasWithState`` (arbitrary state + event-time timeouts).
 
-``F.session_window`` already covers gap-sessions declaratively
-(streaming/windows.py); this operator exists for the semantics the
+``F.session_window`` already covers gap-sessions declaratively;
+this operator exists for the semantics the
 built-in cannot express — carrying arbitrary running state per key
 (first/last event types, custom accumulators) and emitting exactly one
 row per *closed* session. It is the template for the reference-shaped

@@ -64,6 +64,43 @@ def _norm(v) -> str:
     return str(v)
 
 
+def check(spark, con, name: str, q) -> str:
+    """Run one query against its oracle, print the verdict line and
+    return "pass", "fail" or "rows" (rows-only, no oracle)."""
+    t0 = time.time()
+    try:
+        sdf = q.spark(spark, SF_DIR).toPandas()
+    except Exception as exc:
+        print(f"FAIL  {name}: SPARK ERROR {type(exc).__name__}: {str(exc)[:300]}")
+        return "fail"
+    if q.oracle is None:
+        print(f"ROWS  {name}: {len(sdf)} rows (no oracle)")
+        return "rows"
+    try:
+        odf = con.sql(q.oracle).df()
+    except Exception as exc:
+        print(f"FAIL  {name}: DUCKDB ERROR {type(exc).__name__}: {str(exc)[:300]}")
+        return "fail"
+    a, b = canon(sdf), canon(odf)
+    dt = time.time() - t0
+    if list(a.columns) != list(b.columns):
+        print(f"FAIL  {name}: columns {list(a.columns)} vs {list(b.columns)}")
+        return "fail"
+    if len(a) != len(b):
+        print(f"FAIL  {name}: rows {len(a)} vs {len(b)}")
+        return "fail"
+    if not a.equals(b):
+        diff = (a != b).any(axis=1)
+        idx = diff[diff].index[:3]
+        print(f"FAIL  {name}: value mismatch ({int(diff.sum())}/{len(a)} rows differ)")
+        for i in idx:
+            print(f"      spark : {a.loc[i].to_dict()}")
+            print(f"      oracle: {b.loc[i].to_dict()}")
+        return "fail"
+    print(f"PASS  {name}: {len(a)} rows [{dt:.1f}s]")
+    return "pass"
+
+
 def main() -> int:
     subs = sys.argv[1:]
     reg = registry()
@@ -77,47 +114,19 @@ def main() -> int:
         names = [n for n in reg if not subs or any(s in n for s in subs)]
     spark = get_spark("parity", cpus=8)
     con = duck_con()
-    n_pass = n_fail = n_rows_only = 0
+    counts = {"pass": 0, "fail": 0, "rows": 0}
     for name in names:
-        q = reg[name]
-        t0 = time.time()
         try:
-            sdf = q.spark(spark, SF_DIR).toPandas()
-        except Exception as exc:
-            print(f"FAIL  {name}: SPARK ERROR {type(exc).__name__}: {str(exc)[:300]}")
-            n_fail += 1
-            continue
-        if q.oracle is None:
-            print(f"ROWS  {name}: {len(sdf)} rows (no oracle)")
-            n_rows_only += 1
-            continue
-        try:
-            odf = con.sql(q.oracle).df()
-        except Exception as exc:
-            print(f"FAIL  {name}: DUCKDB ERROR {type(exc).__name__}: {str(exc)[:300]}")
-            n_fail += 1
-            continue
-        a, b = canon(sdf), canon(odf)
-        dt = time.time() - t0
-        if list(a.columns) != list(b.columns):
-            print(f"FAIL  {name}: columns {list(a.columns)} vs {list(b.columns)}")
-            n_fail += 1
-        elif len(a) != len(b):
-            print(f"FAIL  {name}: rows {len(a)} vs {len(b)}")
-            n_fail += 1
-        elif not a.equals(b):
-            diff = (a != b).any(axis=1)
-            idx = diff[diff].index[:3]
-            print(f"FAIL  {name}: value mismatch ({int(diff.sum())}/{len(a)} rows differ)")
-            for i in idx:
-                print(f"      spark : {a.loc[i].to_dict()}")
-                print(f"      oracle: {b.loc[i].to_dict()}")
-            n_fail += 1
-        else:
-            print(f"PASS  {name}: {len(a)} rows [{dt:.1f}s]")
-            n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only of {len(names)}")
-    return 1 if n_fail else 0
+            counts[check(spark, con, name, reg[name])] += 1
+        finally:
+            # builders persist plan-lifetime frames; release them so
+            # the next query starts from an empty cache
+            spark.catalog.clearCache()
+    print(
+        f"\n{counts['pass']} pass, {counts['fail']} fail, "
+        f"{counts['rows']} rows-only of {len(names)}"
+    )
+    return 1 if counts["fail"] else 0
 
 
 if __name__ == "__main__":

@@ -53,3 +53,27 @@ def test_cm_sketch_from_census_custom_weight_col(spark):
     got = _rows(cm_sketch_from_census(split_census, weight_col="w"), keys)
     want = _rows(cm_sketch(tok), keys)
     assert got and got == want
+
+
+def test_cm_estimate_never_undercounts(spark):
+    """Count-min's one-sided guarantee on q188's estimator: every point
+    estimate is at least the term's exact count."""
+    from polla_spark.functions.cmsketch import cm_estimate, cm_sketch
+    from polla_spark.session import read_table
+
+    tok = read_table(spark, SF_DIR, "documents").select(
+        F.explode(F.split(F.col("text"), "\\s+")).alias("term")
+    )
+    probes = (
+        tok.groupBy("term")
+        .agg(F.count("*").alias("n_true"))
+        .orderBy(F.desc("n_true"), "term")
+        .limit(20)
+    )
+    est = {
+        r["term"]: r["est"]
+        for r in cm_estimate(probes.select("term"), cm_sketch(tok)).collect()
+    }
+    truth = {r["term"]: r["n_true"] for r in probes.collect()}
+    assert est.keys() == truth.keys()
+    assert all(est[t] >= n for t, n in truth.items())

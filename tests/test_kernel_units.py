@@ -354,3 +354,29 @@ def test_bg_set_null_text_matches_duckdb(spark):
     # and the downstream flag semantics: NULL set -> flag 0 via the
     # CASE in BOTH engines (fs_flag_cols' documented contract)
     assert got[3] == {""} and got[4] == {"x"}    # degenerate titles agree
+
+
+def test_fs_flag_cols_fold_null_comparisons_to_zero(spark):
+    """fs_flag_cols' CASE semantics on hand-checkable SNM neighbor
+    pairs: a NULL source, length or shingle/bigram set folds its flag
+    into the 0 pattern, never a NULL flag or a crash."""
+    from polla_spark.functions.linkage import fs_flag_cols
+
+    pairs = spark.createDataFrame(
+        [
+            # src pdf!=web; len NULL; jac disjoint; bg {zz}∩{ab,bc}=∅
+            (1, "pdf", "web", None, 10, ["z z z"], ["a b c"], ["zz"], ["ab", "bc"]),
+            # src equal; |10-11|*20 <= 21; jac equal; 2*|{ab}| >= min(2,2)
+            (2, "web", "web", 10, 11, ["a b c"], ["a b c"], ["ab", "bc"], ["ab", "xy"]),
+            # src NULL; len equal; jac/bg NULL side
+            (3, None, None, 5, 5, None, ["a"], None, ["aa"]),
+        ],
+        "pair long, source_a string, source_b string, n_chars_a long, "
+        "n_chars_b long, sha array<string>, shb array<string>, "
+        "bg_a array<string>, bg_b array<string>",
+    )
+    got = {
+        r["pair"]: (r["g1"], r["g2"], r["g3"], r["g4"])
+        for r in pairs.select("pair", *fs_flag_cols()).collect()
+    }
+    assert got == {1: (0, 0, 0, 0), 2: (1, 1, 1, 1), 3: (0, 1, 0, 0)}

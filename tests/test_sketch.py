@@ -1,7 +1,8 @@
 """Misra-Gries heavy-hitter sketch: the mergeable-summaries guarantees
 (no false negatives above n/(k+1); estimates are bounded under-counts)
-pinned against the exact census — the correctness gate for the
-adversarial-cardinality twin of q175."""
+pinned against the exact census — the correctness gate for q177,
+the adversarial-cardinality form of q175, and for the streaming
+heavy-hitter sink."""
 
 from __future__ import annotations
 
@@ -141,10 +142,7 @@ def test_streaming_sketch_keeps_guarantees(spark, tmp_path):
     across micro-batch cuts."""
     from collections import Counter
 
-    from polla_spark.streaming.windows import (
-        finish_heavy_hitters,
-        heavy_hitter_partials,
-    )
+    from polla_spark.operators.sketch import mg_merge
 
     rows = (
         [("hot",)] * 4000
@@ -165,7 +163,7 @@ def test_streaming_sketch_keeps_guarantees(spark, tmp_path):
     )
     k = 16
     q = (
-        heavy_hitter_partials(stream, "key", k)
+        mg_partials(stream, "key", k)
         .writeStream.format("memory")
         .queryName("hh_partials")
         .outputMode("append")
@@ -181,7 +179,7 @@ def test_streaming_sketch_keeps_guarantees(spark, tmp_path):
     assert partials.groupBy("key").count().filter("count > 1").count() > 0
     got = {
         r["key"]: r["est"]
-        for r in finish_heavy_hitters(partials, k).collect()
+        for r in mg_merge(partials, k).collect()
     }
     truth = Counter(key for (key,) in rows)
     n = len(rows)
@@ -210,9 +208,9 @@ def test_streaming_sketch_compaction_bounds_sink(spark, tmp_path):
     from polla_spark.operators.sketch import (
         compact_heavy_hitters,
         heavy_hitter_foreach_batch,
+        mg_merge,
         read_heavy_hitter_partials,
     )
-    from polla_spark.streaming.windows import finish_heavy_hitters
 
     rows = (
         [("hot",)] * 4000
@@ -255,7 +253,7 @@ def test_streaming_sketch_compaction_bounds_sink(spark, tmp_path):
             assert pre > compacted
     got = {
         r["key"]: r["est"]
-        for r in finish_heavy_hitters(
+        for r in mg_merge(
             read_heavy_hitter_partials(spark, sink), k
         ).collect()
     }

@@ -81,193 +81,6 @@ def test_stateful_sessionizer_equals_batch(spark, staged_stream_dir):
     assert len(got) > 20  # real sessionization happened, not a trivial pass
 
 
-@pytest.fixture(scope="module")
-def funnel_stream_dir(spark, tmp_path_factory):
-    """Events split into three time-ordered files so the funnel state
-    machine is exercised ACROSS micro-batches, not inside one."""
-    from polla_spark.session import read_table
-
-    d = tmp_path_factory.mktemp("funnel_stream")
-    ev = (
-        read_table(spark, SF_DIR, "events")
-        .select("ts", "event_id", "user_id", "event_type")
-        .orderBy("ts", "event_id")
-    )
-    rows = ev.collect()
-    third = len(rows) // 3
-    chunks = (rows[:third], rows[third : 2 * third], rows[2 * third :])
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, ev.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    return d, ev.schema
-
-
-def test_funnel_stream_equals_q108(spark, funnel_stream_dir):
-    """Stateful streaming funnel == batch q108 on ts-ordered arrival,
-    including users whose stages straddle micro-batch boundaries."""
-    from polla_spark.plans.windows_q import q108_funnel
-    from polla_spark.streaming.windows import funnel_report, funnel_updates
-
-    d, schema = funnel_stream_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        funnel_updates(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = funnel_report(spark.table("funnel_updates")).collect()[0]
-    want = q108_funnel(spark, SF_DIR).collect()[0]
-    assert got.asDict() == want.asDict()
-    # the funnel must really fire: some users convert fully
-    assert want["n_purchased"] > 0
-
-
-def test_funnel_tws_equals_q108(spark, funnel_stream_dir):
-    """The transformWithStateInPandas funnel (Spark 4 StatefulProcessor
-    API) must produce the identical report as the
-    applyInPandasWithState one and batch q108.
-
-    Skipped where google.protobuf is absent: Spark's
-    transformWithState state-server protocol is protobuf-encoded, so
-    the API cannot run at all without it (verified: the driver worker
-    crashes importing StateMessage_pb2). The applyInPandasWithState
-    twin (test above) carries the funnel's correctness gate there.
-    """
-    pytest.importorskip("google.protobuf")
-    from polla_spark.plans.windows_q import q108_funnel
-    from polla_spark.streaming.windows import funnel_report, funnel_updates_tws
-
-    d, schema = funnel_stream_dir
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/*/")
-        )
-        q = (
-            funnel_updates_tws(stream)
-            .writeStream.format("memory")
-            .queryName("funnel_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    got = funnel_report(spark.table("funnel_tws")).collect()[0]
-    want = q108_funnel(spark, SF_DIR).collect()[0]
-    assert got.asDict() == want.asDict()
-
-
-def test_funnel_is_replay_safe(spark, funnel_stream_dir, tmp_path):
-    """At-least-once delivery: replaying the whole event set as a
-    duplicate batch must not move any funnel stage (view/click/
-    purchase timestamps are monotone set-once — a replayed event can
-    never 'refill' a stage), so the report is identical to the
-    no-replay run; only upd_seq grows."""
-    import shutil
-
-    from polla_spark.plans.windows_q import q108_funnel
-    from polla_spark.streaming.windows import funnel_report, funnel_updates
-
-    d, schema = funnel_stream_dir
-    src = tmp_path / "replayed"
-    src.mkdir()
-    parts = sorted(p.name for p in d.iterdir() if p.name.startswith("part"))
-    for name in parts:
-        shutil.copytree(d / name, src / name)
-    # replay: the SAME rows again as later batches (new file names, so
-    # the source treats them as fresh input)
-    for name in parts:
-        shutil.copytree(d / name, src / f"replay_{name}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*/")
-    )
-    q = (
-        funnel_updates(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_replayed")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = funnel_report(spark.table("funnel_replayed")).collect()[0]
-    want = q108_funnel(spark, SF_DIR).collect()[0]
-    assert got.asDict() == want.asDict()
-
-
-def test_retention_partials_equal_q109(spark, funnel_stream_dir):
-    """Streaming (user, day) partials + read-time finisher == batch
-    q109 retention cohorts."""
-    from polla_spark.plans.windows_q import q109_retention_cohorts
-    from polla_spark.streaming.windows import (
-        finish_retention,
-        retention_partials,
-        run_to_memory,
-    )
-
-    d, schema = funnel_stream_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    partials = run_to_memory(
-        retention_partials(stream), "t_retention_partials", "complete"
-    )
-    got = [tuple(r) for r in finish_retention(partials).collect()]
-    want = [tuple(r) for r in q109_retention_cohorts(spark, SF_DIR).collect()]
-    assert got == want
-    assert len(got) >= 3  # multiple cohort cells exist in the fixture
-
-
-def test_rolling_active_partials_equal_q132(spark, funnel_stream_dir):
-    """Streaming distinct (user, day) partials + read-time 7x fan-out
-    finisher == batch q132 rolling 7-day actives."""
-    from polla_spark.plans.windows_q import q132_rolling_active_users
-    from polla_spark.streaming.windows import (
-        finish_rolling_active,
-        rolling_active_partials,
-        run_to_memory,
-    )
-
-    d, schema = funnel_stream_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    partials = run_to_memory(
-        rolling_active_partials(stream), "t_rolling_partials", "complete"
-    )
-    got = [tuple(r) for r in finish_rolling_active(partials).collect()]
-    want = [tuple(r) for r in q132_rolling_active_users(spark, SF_DIR).collect()]
-    assert got == want
-    assert len(got) >= 7  # the window tail extends past the last day
-
-
 def test_stateful_late_events_across_batches(spark, tmp_path):
     """Late-but-within-watermark events arriving in a LATER micro-batch
     must merge into the stored session via min/max (start can move
@@ -330,329 +143,59 @@ def test_stateful_late_events_across_batches(spark, tmp_path):
     assert merged[5] == "z" and merged[6] == "b"
 
 
-def test_transition_stream_equals_q114(spark, funnel_stream_dir):
-    """Streaming transition deltas summed == batch q114 matrix — the
-    stored last-event state must stitch transitions across the three
-    micro-batch cuts (users' consecutive events straddle files)."""
-    from polla_spark.plans.windows_q import q114_transition_matrix
-    from polla_spark.streaming.windows import finish_transitions, transition_deltas
+def test_clamped_balance_unknown_event_type_matches_batch(spark):
+    """An event type absent from BALANCE_DELTAS must take q150's
+    .otherwise(BALANCE_DEFAULT) branch, not the purchase value-cents
+    branch (unknown types were once mis-mapped to value-cents)."""
+    from polla_spark.functions.events import BALANCE_DEFAULT, balance_delta_col
 
-    d, schema = funnel_stream_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        transition_deltas(stream)
-        .writeStream.format("memory")
-        .queryName("transition_deltas")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    deltas = spark.table("transition_deltas")
-    # at least one user's boundary transition crossed a batch cut;
-    # otherwise this test degenerates to single-batch coverage
-    assert deltas.groupBy("user_id").count().filter("count > 1").count() > 0
-    got = [tuple(r) for r in finish_transitions(deltas).collect()]
-    want = [tuple(r) for r in q114_transition_matrix(spark, SF_DIR).collect()]
-    assert got == want
-
-
-@pytest.fixture(scope="module")
-def attribution_stream_dir(spark, tmp_path_factory):
-    """Events (incl. props/value) split into three time-ordered files
-    so the carried-click state stitches attribution across batches."""
-    from polla_spark.session import read_table
-
-    d = tmp_path_factory.mktemp("attribution_stream")
-    ev = (
-        read_table(spark, SF_DIR, "events")
-        .select("ts", "event_id", "user_id", "event_type", "value", "props")
-        .orderBy("ts", "event_id")
-    )
-    rows = ev.collect()
-    third = len(rows) // 3
-    chunks = (rows[:third], rows[third : 2 * third], rows[2 * third :])
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, ev.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    return d, ev.schema
-
-
-def test_attribution_stream_equals_q138(spark, attribution_stream_dir):
-    """Streaming carried-click attribution == batch q138 report —
-    purchases whose qualifying click arrived in an EARLIER micro-batch
-    must still credit it (the stored state stitches the cut)."""
-    from polla_spark.plans.windows_q import q138_last_touch_attribution
-    from polla_spark.streaming.windows import attribution_stream, finish_attribution
-
-    d, schema = attribution_stream_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        attribution_stream(stream)
-        .writeStream.format("memory")
-        .queryName("attributed_purchases")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    attributed = spark.table("attributed_purchases")
-    got = [tuple(r) for r in finish_attribution(attributed).collect()]
-    want = [tuple(r) for r in q138_last_touch_attribution(spark, SF_DIR).collect()]
-    assert got == want
-    assert len(got) > 1  # multiple campaigns + the (organic) bucket
-
-
-def test_clamped_balance_stream_equals_q150(spark, attribution_stream_dir):
-    """Streaming (running sum, running min) state + read-time finisher
-    == batch q150 — the clamp identity stitches exactly across
-    micro-batch cuts because both accumulators are merge-closed."""
-    from polla_spark.plans.windows_q import q150_clamped_balance
-    from polla_spark.streaming.windows import (
-        clamped_balance_partials,
-        finish_clamped_balance,
-    )
-
-    d, schema = attribution_stream_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        clamped_balance_partials(stream)
-        .writeStream.format("memory")
-        .queryName("balance_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    updates = spark.table("balance_updates")
-    # multi-batch users exist, so the state really stitched cuts
-    assert updates.groupBy("user_id").count().filter("count > 1").count() > 0
-    got = finish_clamped_balance(updates).collect()[0]
-    want = q150_clamped_balance(spark, SF_DIR).collect()[0]
-    assert got.asDict() == want.asDict()
-
-
-def test_clamped_balance_unknown_event_type_matches_batch(spark, tmp_path):
-    """An event type absent from _BAL_DELTAS must take the batch
-    .otherwise(-50) branch, not the purchase value-cents branch —
-    pins the streaming==batch contract for future event types
-    (ADVICE r3: unknown types were mis-mapped to value-cents)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from polla_spark.streaming.windows import (
-        clamped_balance_partials,
-        finish_clamped_balance,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    t0 = dt.datetime(2024, 1, 1)
     rows = [
-        (t0, 1, 7, "signup", 0.0),          # +1000
-        (t0 + dt.timedelta(minutes=1), 2, 7, "refund", 99.0),  # unknown -> -50
-        (t0 + dt.timedelta(minutes=2), 3, 7, "purchase", 2.5),  # +250
+        (1, "signup", 0.0),     # +1000
+        (2, "refund", 99.0),    # unknown -> BALANCE_DEFAULT
+        (3, "purchase", 2.5),   # +250
     ]
-    d = tmp_path / "stream"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(d / "p0"))
-    stream = spark.readStream.schema(schema).parquet(f"{d}/*/")
-    q = (
-        clamped_balance_partials(stream)
-        .writeStream.format("memory")
-        .queryName("unknown_type_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = finish_clamped_balance(spark.table("unknown_type_updates")).collect()[0]
-    # batch semantics: 1000 - 50 + 250 = 1200, running min never < 0
-    assert got.asDict() == {
-        "n_users": 1,
-        "n_floored": 0,
-        "total_final_cents": 1200,
-        "max_final_cents": 1200,
-    }
+    got = [
+        r["d"]
+        for r in spark.createDataFrame(rows, "event_id long, event_type string, value double")
+        .select("event_id", balance_delta_col().alias("d"))
+        .orderBy("event_id")
+        .collect()
+    ]
+    # 1000 - 50 + 250 = 1200
+    assert BALANCE_DEFAULT == -50
+    assert got == [1000, -50, 250] and sum(got) == 1200
 
 
-def test_clamped_balance_null_purchase_value_matches_batch(spark, tmp_path):
-    """A purchase with a NULL value contributes 0 in BOTH engines
-    (ADVICE r4: batch yielded a NULL delta — silently dropping the row
-    from the sum — while the streaming kernel raised on
-    int(floor(NaN*100)); functions/events.py now defines the case
-    explicitly in balance_delta_col and balance_delta_py)."""
-    import datetime as dt
+def test_clamped_balance_null_purchase_value_matches_batch(spark):
+    """A purchase with a NULL or NaN value contributes 0 to q150's
+    balance: a NULL delta would silently drop the row from the window
+    sum, and under Spark 4's default ANSI mode CAST(NaN AS LONG) would
+    abort the query (functions/events.balance_delta_col)."""
     import math
 
-    from pyspark.sql import types as T
-
-    from polla_spark.functions.events import balance_delta_py
-    from polla_spark.streaming.windows import (
-        clamped_balance_partials,
-        finish_clamped_balance,
-    )
-
-    # kernel-level contract: null and NaN both map to 0
-    assert balance_delta_py("purchase", None) == 0
-    assert balance_delta_py("purchase", math.nan) == 0
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (t0, 1, 7, "signup", 0.0),                              # +1000
-        (t0 + dt.timedelta(minutes=1), 2, 7, "purchase", None),  # null -> 0
-        (t0 + dt.timedelta(minutes=2), 3, 7, "purchase", 2.5),   # +250
-    ]
-    d = tmp_path / "stream"
-    batch = spark.createDataFrame(rows, schema)
-    batch.coalesce(1).write.parquet(str(d / "p0"))
-
-    # batch column on the same rows: 1000 + 0 + 250
     from polla_spark.functions.events import balance_delta_col
 
-    total = batch.select(balance_delta_col().alias("d")).groupBy().sum("d")
+    schema = "event_id long, event_type string, value double"
+    rows = [
+        (1, "signup", 0.0),      # +1000
+        (2, "purchase", None),   # null -> 0
+        (3, "purchase", 2.5),    # +250
+    ]
+    total = (
+        spark.createDataFrame(rows, schema)
+        .select(balance_delta_col().alias("d"))
+        .groupBy()
+        .sum("d")
+    )
     assert total.collect()[0][0] == 1250
 
-    # NaN purchase: under Spark 4's default ANSI mode CAST(NaN AS
-    # LONG) would abort the query — the column must map it to 0, like
-    # the streaming kernel (r5 self-review finding)
-    nan_rows = [(t0, 9, 8, "purchase", math.nan)]
     nan_total = (
-        spark.createDataFrame(nan_rows, schema)
+        spark.createDataFrame([(9, "purchase", math.nan)], schema)
         .select(balance_delta_col().alias("d"))
         .groupBy()
         .sum("d")
     )
     assert nan_total.collect()[0][0] == 0
-
-    stream = spark.readStream.schema(schema).parquet(f"{d}/*/")
-    q = (
-        clamped_balance_partials(stream)
-        .writeStream.format("memory")
-        .queryName("null_purchase_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = finish_clamped_balance(spark.table("null_purchase_updates")).collect()[0]
-    assert got.asDict() == {
-        "n_users": 1,
-        "n_floored": 0,
-        "total_final_cents": 1250,
-        "max_final_cents": 1250,
-    }
-
-
-def test_behavior_mask_stream_equals_q148(spark, tmp_path):
-    """Streaming per-user bool-or flags + read-time census == batch
-    q148 — the mask partials are merge-closed so micro-batch cuts
-    stitch exactly. Events are split ROUND-ROBIN into three files so
-    most users' flag sets accumulate across batches (the batch window
-    covers only the first 2 days, which a time-ordered split would put
-    in one file)."""
-    from polla_spark.plans.windows_q import q148_behavior_cohorts
-    from polla_spark.session import read_table
-    from polla_spark.streaming.windows import (
-        behavior_mask_partials,
-        finish_behavior_cohorts,
-    )
-    from pyspark.sql import functions as F
-
-    ev = (
-        read_table(spark, SF_DIR, "events")
-        .filter(F.col("ts") < F.lit("2024-01-03 00:00:00").cast("timestamp"))
-        .select("ts", "event_id", "user_id", "event_type")
-        .orderBy("ts", "event_id")
-    )
-    rows = ev.collect()
-    d = tmp_path / "mask_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], ev.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        behavior_mask_partials(stream)
-        .writeStream.format("memory")
-        .queryName("behavior_mask_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    updates = spark.table("behavior_mask_updates")
-    # multi-batch users exist, so the state really stitched cuts
-    assert updates.groupBy("user_id").count().filter("count > 1").count() > 0
-    got = [tuple(r) for r in finish_behavior_cohorts(updates).collect()]
-    want = [tuple(r) for r in q148_behavior_cohorts(spark, SF_DIR).collect()]
-    assert got == want
-    assert len(got) > 1  # several behavior combinations present
-
-
-def test_time_to_convert_stream_equals_q149(spark, attribution_stream_dir):
-    """Streaming conditional-min (first view / first purchase) state +
-    read-time percentile finisher == batch q149."""
-    from polla_spark.plans.windows_q import q149_time_to_convert
-    from polla_spark.streaming.windows import (
-        conversion_partials,
-        finish_time_to_convert,
-    )
-
-    d, schema = attribution_stream_dir
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        conversion_partials(stream)
-        .writeStream.format("memory")
-        .queryName("conversion_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    updates = spark.table("conversion_updates")
-    assert updates.groupBy("user_id").count().filter("count > 1").count() > 0
-    got = finish_time_to_convert(updates).collect()[0]
-    want = q149_time_to_convert(spark, SF_DIR).collect()[0]
-    assert got.asDict() == want.asDict()
-    assert got["n_converters"] > 0
 
 
 class _FakeState:
@@ -752,37 +295,6 @@ def test_session_kernel_much_older_event_closes_as_own_session():
     assert (r["start_us"], r["end_us"], r["n_events"]) == (
         500_000_000, 500_000_000, 1)
     assert st.get[0] == 1_000_000_000 and st.get[2] == 1
-
-
-def test_kmv_kernel_merge_closure_and_truncation():
-    """In-process KMV stateful kernel (make_kmv_kernel): state is the
-    <=K smallest DISTINCT hashes; feeding the same hashes in any
-    batching/order yields the same kept list (merge closure), and the
-    list truncates at K."""
-    import pandas as pd
-
-    from polla_spark.functions.kmv import KMV_K
-    from polla_spark.streaming.windows import make_kmv_kernel
-
-    fn = make_kmv_kernel()
-
-    # duplicate + unordered input collapses to sorted distinct
-    st = _FakeState()
-    out = list(fn(("es",), iter([pd.DataFrame({"h": [5, 3, 5, 9]}),
-                                 pd.DataFrame({"h": [3, 1]})]), st))
-    assert len(out) == 1
-    assert out[0].iloc[0]["minima"] == [1, 3, 5, 9]
-    assert out[0].iloc[0]["upd_seq"] == 1
-
-    # second batch merges with stored state, keeps the K smallest
-    big = pd.DataFrame({"h": list(range(10_000, 10_000 + KMV_K))})
-    out2 = list(fn(("es",), iter([big]), st))
-    kept = out2[0].iloc[0]["minima"]
-    assert len(kept) == KMV_K
-    assert kept[:4] == [1, 3, 5, 9]      # old minima survive at the front
-    assert kept == sorted(kept)          # sorted ascending
-    assert out2[0].iloc[0]["upd_seq"] == 2
-    assert st.get[0] == kept             # state == emitted minima
 
 
 def _fs_pdf(rows):

@@ -1,900 +1,39 @@
-"""Streaming == batch equivalence on finite input (SURVEY.md §2.6:
-streaming ops are verified against their own batch mode)."""
+"""Streaming forms, each checked against its batch counterpart on
+finite input: the paper's pipeline as a ``foreachBatch``
+(streaming/pipeline.py) — each micro-batch runs the same consensus
+kernel as the batch path and gates publication on the state the
+previous micro-batches wrote — the stateful incremental-LSH kernels
+(streaming/stateful.py), and the stateless per-asset operators, which
+run unchanged on a stream."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from polla_spark.streaming import windows as SW
-
-SF_DIR = "/root/testdata/sf0.001"
-
-# The testdata ships events.ts as parquet TIMESTAMP(MICROS,
-# isAdjustedToUTC=false); under the session's inferTimestampNTZ=false it
-# scans as an LTZ timestamp whose instant equals the wall-clock in UTC
-# (session tz pinned UTC) — the same normalization read_table applies.
-# Never hardcode the physical type here: derive the stream schema from
-# the live parquet footer so testdata regeneration can't desync it.
-RAW_EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _schema_matches_footer(spark):
-    """Pin RAW_EVENTS to the real footer (as read under session configs)."""
-    real = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
-    assert [(f.name, f.dataType) for f in real.fields] == [
-        (f.name, f.dataType) for f in RAW_EVENTS.fields
-    ], f"testdata schema drifted: {real.simpleString()}"
-
-
-@pytest.fixture(scope="module")
-def stream_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("events_stream")
-    os.symlink(f"{SF_DIR}/events.parquet", d / "events.parquet")
-    return str(d)
-
-
-@pytest.fixture()
-def stream_events(spark, stream_dir):
-    return spark.readStream.schema(RAW_EVENTS).parquet(stream_dir)
-
-
-@pytest.fixture()
-def batch_events(spark):
-    from polla_spark.session import read_table
-
-    return read_table(spark, SF_DIR, "events")
+from tests.conftest import SF_SMOKE as SF_DIR
 
 
 def _rows(df, keys):
     return sorted(tuple(r[k] for k in keys) for r in df.collect())
 
 
-def test_tumbling_stream_equals_batch(spark, stream_events, batch_events):
-    stream_out = SW.run_to_memory(
-        SW.tumbling_counts(stream_events), "t_tumbling", "complete"
-    )
-    batch_out = SW.tumbling_counts(batch_events)
-    keys = ["window_start", "event_type", "n", "sum_vq"]
-    assert _rows(stream_out, keys) == _rows(batch_out, keys)
-
-
-def test_sliding_stream_equals_batch(spark, stream_events, batch_events):
-    stream_out = SW.run_to_memory(
-        SW.sliding_counts(stream_events), "t_sliding", "complete"
-    )
-    batch_out = SW.sliding_counts(batch_events)
-    keys = ["window_start", "n", "sum_vq"]
-    assert _rows(stream_out, keys) == _rows(batch_out, keys)
-
-
-def test_session_stream_equals_batch_sessionize(spark, stream_events):
-    """session_window streaming == the batch lag+cumsum plan (q72)."""
-    from polla_spark.plans.windows_q import q72_sessionize
-
-    stream_out = SW.run_to_memory(
-        SW.session_counts(stream_events), "t_session", "complete"
-    )
-    batch = q72_sessionize(spark, SF_DIR)
-    keys = ["user_id", "session_start", "n_events"]
-    assert _rows(stream_out, keys) == _rows(
-        batch.select("user_id", "session_start", "n_events"), keys
-    )
-
-
-def test_sliding_stream_equals_q71(spark, stream_events):
-    """The sliding-window stream must reproduce q71's batch result
-    exactly (same width/slide/quantization)."""
-    from polla_spark.plans.windows_q import q71_sliding
-
-    stream_out = SW.run_to_memory(
-        SW.sliding_counts(stream_events), "t_sliding_q71", "complete"
-    )
-    keys = ["window_start", "n", "sum_vq"]
-    assert _rows(stream_out, keys) == _rows(q71_sliding(spark, SF_DIR), keys)
-
-
-def test_daily_rollup_stream_equals_q73(spark, stream_events):
-    """Streaming daily rollup == q73: the stream keeps user-grain
-    partials (countDistinct is not mergeable), the read-time rollup
-    finishes to day grain."""
-    from polla_spark.plans.windows_q import q73_event_type_daily
-
-    partials = SW.run_to_memory(
-        SW.daily_user_partials(stream_events), "t_daily_partials", "complete"
-    )
-    got = SW.rollup_daily(partials)
-    keys = ["day", "event_type", "n", "n_users", "sum_vq"]
-    assert _rows(got, keys) == _rows(q73_event_type_daily(spark, SF_DIR), keys)
-
-
-def test_ohlc_stream_equals_q116(spark, stream_events):
-    """Streaming OHLC bars == batch q116 (min_by/max_by are mergeable
-    aggregates, so the streamed bars are exact, not approximate)."""
-    from polla_spark.plans.windows_q import q116_ohlc_bars
-
-    stream_out = SW.run_to_memory(SW.ohlc_bars(stream_events), "t_ohlc", "complete")
-    keys = ["day", "event_type", "open", "high", "low", "close", "volume"]
-    want = q116_ohlc_bars(spark, SF_DIR)
-    assert _rows(stream_out, keys) == _rows(want, keys)
-    assert stream_out.count() > 50  # real multi-day, multi-type bars
-
-
-def test_value_histogram_stream_equals_q118(spark, stream_events):
-    """Streaming histogram == batch q118 (state bounded by the bucket
-    space — 10 rows — so no watermark is needed at all)."""
-    from polla_spark.plans.relational import q118_value_histogram
-
-    stream_out = SW.run_to_memory(
-        SW.value_histogram(stream_events), "t_histogram", "complete"
-    )
-    keys = ["bucket", "lo", "n", "sum_cents", "min_cents", "max_cents"]
-    assert _rows(stream_out, keys) == _rows(q118_value_histogram(spark, SF_DIR), keys)
-
-
-def test_histogram_median_stream_equals_q130(spark, tmp_path):
-    """Streaming histogram-rank median (18th twin) == batch q130 over
-    a MULTI-batch customer stream: the (segment, cents) census merges
-    across micro-batch cuts (update mode; counts only grow, so the
-    finisher's max-collapse recovers the latest state), and the
-    non-mergeable nearest-rank pass runs at read time over the
-    value-domain-bounded histogram. Both engines import the census +
-    report from functions/histogram.py — one source of truth."""
-    from polla_spark.plans.relational import q130_histogram_median
+def _doc_stream(spark, tmp_path, name, cols):
+    """Stage documents as a 3-file stream split on doc_id % 3
+    (batches 1, 2, then 0 — the q227 'delta' split last)."""
     from polla_spark.session import read_table
 
-    cust = read_table(spark, SF_DIR, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
-    rows = cust.collect()
-    d = tmp_path / "cust_stream"
-    # three interleaved slices -> every segment's census accumulates
-    # across all three micro-batches
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], cust.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
+    docs = read_table(spark, SF_DIR, "documents").select(*cols)
+    d = tmp_path / name
+    for part, i in enumerate([1, 2, 0]):
+        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
+            str(d / f"part{part}")
         )
-    stream = (
-        spark.readStream.schema(cust.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.histogram_median_partials(stream)
-        .writeStream.format("memory")
-        .queryName("hist_median_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_histogram_median(spark.table("hist_median_updates"))
-    keys = ["c_mktsegment", "n_rows", "median_cents", "p90_cents"]
-    assert _rows(got, keys) == _rows(q130_histogram_median(spark, SF_DIR), keys)
-
-
-def test_monthly_growth_stream_equals_q122(spark, tmp_path):
-    """Streaming month-grain census (19th twin) == batch q122 over a
-    multi-batch orders stream: cent sums merge across micro-batch
-    cuts (update mode; non-negative sums are monotone, so the
-    finisher's max-collapse recovers the latest state) and the lag
-    window runs at read time over the months-sized table. Census +
-    report shared via functions/trends.py."""
-    from polla_spark.plans.windows_q import q122_monthly_growth
-    from polla_spark.session import read_table
-
-    o = read_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-    rows = o.collect()
-    d = tmp_path / "orders_stream"
-    # interleaved slices -> every month accumulates across batches
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], o.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.monthly_revenue_partials(stream)
-        .writeStream.format("memory")
-        .queryName("monthly_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_monthly_growth(spark.table("monthly_updates"))
-    keys = ["month", "revenue_cents", "growth_pct"]
-    assert _rows(got, keys) == _rows(q122_monthly_growth(spark, SF_DIR), keys)
-
-
-def test_quality_audit_stream_equals_q112(spark, tmp_path):
-    """Streaming quality audit (21st twin) == batch q112 over a
-    MULTI-batch lineitem stream: the 7 scan metrics + the orphan count
-    accumulate in one global streaming agg (update mode; counts are
-    monotone, finisher max-collapses), duplicate-key detection streams
-    at the natural-key grain (q132's pattern — uniqueness is only
-    merge-closed per key), and the stream-static left join supplies
-    referential integrity without duplicating fact rows (o_orderkey is
-    the orders PK). Metric expressions + the tall reshape come from
-    functions/quality.py, shared with batch q112."""
-    from polla_spark.plans.relational import q112_quality_audit
-    from polla_spark.session import read_table
-
-    li = read_table(spark, SF_DIR, "lineitem")
-    rows = li.collect()
-    d = tmp_path / "li_stream"
-    # interleaved slices -> metrics and per-key counts accumulate
-    # across all three micro-batches (duplicate keys, if any, can
-    # straddle a batch cut)
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], li.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    orders = read_table(spark, SF_DIR, "orders")
-    for partials, name in (
-        (SW.quality_scan_partials(stream, orders), "qa_scan_updates"),
-        (SW.dup_key_partials(stream), "qa_dup_updates"),
-    ):
-        q = (
-            partials.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    got = SW.finish_quality_audit(
-        spark.table("qa_scan_updates"), spark.table("qa_dup_updates")
-    )
-    keys = ["metric", "value"]
-    assert _rows(got, keys) == _rows(q112_quality_audit(spark, SF_DIR), keys)
-
-
-def test_simpson_diversity_stream_equals_q186(spark, tmp_path):
-    """Streaming Simpson diversity (23rd twin) == batch q186 over a
-    multi-batch documents stream — including a doc whose TEXT is
-    fragmented across batches (the census is count-merge-closed at
-    the (doc_id, ch) grain, so fragments just add)."""
-    from polla_spark.plans.llmdata import q186_simpson_diversity
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    rows = docs.collect()
-    d = tmp_path / "docs_stream"
-    # batch i carries the i-th THIRD of every doc's text (character
-    # ranges, same doc_id in all three batches) — the genuinely
-    # fragmented case the merge-closure claim is about, not a
-    # whole-row round-robin where each doc arrives intact
-    for i in range(3):
-        frags = []
-        for r in rows:
-            n = len(r["text"])
-            lo, hi = (i * n) // 3, ((i + 1) * n) // 3
-            frags.append((r["doc_id"], r["text"][lo:hi]))
-        spark.createDataFrame(frags, docs.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
+    return docs, (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/*/")
     )
-    q = (
-        SW.char_census_partials(stream)
-        .writeStream.format("memory")
-        .queryName("char_census_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_simpson_diversity(spark.table("char_census_updates"))
-    keys = ["doc_id", "n_chars", "sum_c2", "diversity_ppm"]
-    assert _rows(got, keys) == _rows(q186_simpson_diversity(spark, SF_DIR), keys)
-
-
-def test_bloom_build_stream_equals_q183(spark, tmp_path):
-    """Streaming bloom build (22nd twin) == batch q183 over a
-    multi-batch history stream: bit_or is associative, commutative
-    and idempotent, so the streamed word table must be BIT-IDENTICAL
-    to the batch build (not merely equivalent), and the probe flags
-    over the new batch must match q183's maybe_dup decisions exactly.
-    Geometry + kernels shared via functions/bloom.py."""
-    from polla_spark.functions.bloom import bloom_probe, bloom_word_table
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    hist = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    rows = hist.collect()
-    d = tmp_path / "hist_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], hist.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(hist.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.bloom_word_partials(stream)
-        .writeStream.format("memory")
-        .queryName("bloom_word_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got_flags = SW.finish_bloom_probe(spark.table("bloom_word_updates"), new)
-    # streamed word table is bit-identical to the batch build
-    batch_words = bloom_word_table(
-        hist.select(F.md5("text").alias("hh"))
-    )
-    streamed_words = (
-        spark.table("bloom_word_updates")
-        .groupBy("w")
-        .agg(F.bit_or("word").alias("word"))
-    )
-    assert _rows(streamed_words, ["w", "word"]) == _rows(
-        batch_words, ["w", "word"]
-    )
-    # probe flags equal the batch probe's
-    want_flags = bloom_probe(
-        new.select("doc_id", F.md5("text").alias("hh")), batch_words
-    )
-    keys = ["doc_id", "maybe_dup"]
-    assert _rows(got_flags, keys) == _rows(want_flags, keys)
-
-
-def test_cm_sketch_stream_equals_q188(spark, tmp_path):
-    """Streaming count-min build (24th twin): counters are sums, so
-    the streamed sketch over a 3-batch document stream must be
-    IDENTICAL to the one-shot batch sketch (cell for cell), and the
-    finisher's probe estimates must equal the batch estimator's.
-    Geometry + kernels shared via functions/cmsketch.py."""
-    from polla_spark.functions.cmsketch import cm_estimate, cm_sketch
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    rows = docs.collect()
-    d = tmp_path / "cm_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], docs.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.cm_sketch_partials(stream)
-        .writeStream.format("memory")
-        .queryName("cm_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    tok = docs.select(F.explode(F.split(F.col("text"), "\\s+")).alias("term"))
-    batch_sketch = cm_sketch(tok)
-    streamed_sketch = (
-        spark.table("cm_updates")
-        .groupBy("r", "pos")
-        .agg(F.max("counter").alias("counter"))
-    )
-    keys = ["r", "pos", "counter"]
-    assert _rows(streamed_sketch, keys) == _rows(batch_sketch, keys)
-    probes = (
-        tok.groupBy("term")
-        .agg(F.count("*").alias("n_true"))
-        .orderBy(F.desc("n_true"), "term")
-        .limit(20)
-    )
-    got_est = SW.finish_cm_estimate(spark.table("cm_updates"), probes.select("term"))
-    want_est = cm_estimate(probes.select("term"), batch_sketch)
-    keys = ["term", "est"]
-    assert _rows(got_est, keys) == _rows(want_est, keys)
-    # est >= true: the structural one-sided guarantee, checked on the
-    # streamed estimates against the exact census
-    merged = {r["term"]: r["est"] for r in got_est.collect()}
-    for r in probes.collect():
-        assert merged[r["term"]] >= r["n_true"]
-
-
-def test_duplicate_span_census_stream_equals_q189(spark, tmp_path):
-    """Streaming duplicate-span census (25th twin): gram counts are
-    merge-closed over WHOLE-DOC micro-batches, so the streamed census
-    must equal the batch census gram-for-gram and the finisher's
-    report must equal batch q189 exactly. Docs round-robin across 3
-    batches ARRIVING WHOLE — the documented atomicity unit (grams
-    span token windows, so text fragments would change grams)."""
-    from polla_spark.functions.spans import gram_census
-    from polla_spark.plans.llmdata import q189_duplicate_spans
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    rows = docs.collect()
-    d = tmp_path / "span_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], docs.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.gram_census_partials(stream)
-        .writeStream.format("memory")
-        .queryName("gram_census_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = (
-        spark.table("gram_census_updates")
-        .groupBy("g")
-        .agg(F.max("n_occ").alias("n_occ"))
-    )
-    keys = ["g", "n_occ"]
-    assert _rows(streamed, keys) == _rows(gram_census(docs), keys)
-    got = SW.finish_duplicate_spans(spark.table("gram_census_updates"), docs)
-    keys = ["doc_id", "n_toks", "dup_tokens", "dup_ppm"]
-    assert _rows(got, keys) == _rows(q189_duplicate_spans(spark, SF_DIR), keys)
-
-
-def test_fs_pattern_census_stream_equals_q207(spark, tmp_path):
-    """Streaming FS agreement-pattern census (32nd twin): each LANG
-    BLOCK arrives whole in one micro-batch (the documented atomicity
-    unit — SNM neighbors depend on the complete in-block sort), blocks
-    spread across 3 batches; pattern counts are merge-closed sums, so
-    the streamed census must equal batch q207's census pattern-for-
-    pattern AND the finisher's EM-trained parameters must equal batch
-    q207's report row-for-row."""
-    from polla_spark.plans.llmdata import _fs_census, _fs_neighbors
-    from polla_spark.plans.llmdata import q207_fs_em_weights
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", "source", "n_chars", "text"
-    )
-    d = tmp_path / "fs_stream"
-    batches = [("de", "en"), ("es",), ("fr", "zh")]
-    for i, langs in enumerate(batches):
-        docs.filter(F.col("lang").isin(*langs)).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.fs_census_partials(stream)
-        .writeStream.format("memory")
-        .queryName("fs_census_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    updates = spark.table("fs_census_updates")
-    keys = ["g1", "g2", "g3", "g4", "c"]
-    want_census = _fs_census(_fs_neighbors(spark, SF_DIR))
-    assert _rows(SW.finish_fs_census(updates), keys) == _rows(want_census, keys)
-    keys = ["round", "p", "m1", "m2", "m3", "m4", "u1", "u2", "u3", "u4"]
-    assert _rows(SW.finish_fs_em_weights(updates), keys) == _rows(
-        q207_fs_em_weights(spark, SF_DIR), keys
-    )
-
-
-def test_fs_census_split_block_aborts(spark, tmp_path):
-    """The atomicity contract is ENFORCED, not assumed: the same lang
-    arriving in two micro-batches must abort the query (a census over
-    half-derived neighborhoods would be silently wrong)."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", "source", "n_chars", "text"
-    )
-    d = tmp_path / "fs_split"
-    en = docs.filter(F.col("lang") == "en")
-    en.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(str(d / "a"))
-    en.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(str(d / "b"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.fs_census_partials(stream)
-        .writeStream.format("memory")
-        .queryName("fs_census_split")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(StreamingQueryException, match="atomicity"):
-        q.awaitTermination(300)
-
-
-def test_jaro_winkler_stream_equals_q211(spark, tmp_path):
-    """Streaming Jaro-Winkler scoring (33rd twin): SNM pairs are
-    generated per whole lang block (the #32 atomicity contract), and
-    the finisher scores them through the IDENTICAL batch comparator
-    operator — so the streamed report must equal batch q211
-    row-for-row, jaro and jw both."""
-    from polla_spark.plans.llmdata import q211_jaro_winkler
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", "n_chars", "text"
-    )
-    d = tmp_path / "jw_stream"
-    for i, langs in enumerate([("de", "en"), ("es",), ("fr", "zh")]):
-        docs.filter(F.col("lang").isin(*langs)).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.snm_pair_partials(stream)
-        .writeStream.format("memory")
-        .queryName("jw_pairs")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_jaro_winkler(spark.table("jw_pairs"))
-    keys = ["doc_a", "doc_b", "w_dist", "jaro_ppm", "jw_ppm"]
-    assert _rows(got, keys) == _rows(q211_jaro_winkler(spark, SF_DIR), keys)
-
-
-def _sorted_slices(docs, n_slices=3):
-    """Split every lang block into ``n_slices`` CONSECUTIVE slices of
-    its (n_chars NULLS FIRST, doc_id) sort — the staging for twin
-    #34's sorted-arrival contract: batch i carries slice i of every
-    lang, so each block spans all batches IN ORDER."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("lang").orderBy(
-        F.asc_nulls_first("n_chars"), "doc_id"
-    )
-    ranked = docs.withColumn("rn", F.row_number().over(w)).withColumn(
-        "nblk", F.count("*").over(Window.partitionBy("lang"))
-    )
-    return [
-        ranked.filter(F.expr(f"(({n_slices} * (rn - 1)) div nblk) = {i}"))
-        .drop("rn", "nblk")
-        for i in range(n_slices)
-    ]
-
-
-def test_jaro_winkler_sorted_stream_equals_q211(spark, tmp_path):
-    """Streaming Jaro-Winkler over the BOUNDED-STATE sorted-arrival
-    SNM (34th twin): every lang block is split mid-block across all 3
-    micro-batches (the exact shape twins #32/#33 must abort on), the
-    kernel keeps only the last w=3 rows per lang, and the identical
-    batch comparator scores the pairs — so the streamed report equals
-    batch q211 row-for-row with O(w) state."""
-    import time
-
-    from polla_spark.plans.llmdata import q211_jaro_winkler
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", "n_chars", "text"
-    )
-    d = tmp_path / "jw_sorted_stream"
-    for i, sl in enumerate(_sorted_slices(docs)):
-        sl.coalesce(1).write.parquet(str(d / f"part{i}"))
-        time.sleep(0.1)  # the file source orders batches by mtime
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.snm_pair_partials_sorted(stream)
-        .writeStream.format("memory")
-        .queryName("jw_sorted_pairs")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_jaro_winkler(spark.table("jw_sorted_pairs"))
-    keys = ["doc_a", "doc_b", "w_dist", "jaro_ppm", "jw_ppm"]
-    assert _rows(got, keys) == _rows(q211_jaro_winkler(spark, SF_DIR), keys)
-
-
-def test_snm_sorted_stream_aborts_on_disorder(spark, tmp_path):
-    """Twin #34's sorted-arrival contract is ENFORCED: feeding a lang
-    block's LATER slice before its earlier one aborts the query."""
-    import time
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", "n_chars", "text"
-    ).filter(F.col("lang") == "en")
-    d = tmp_path / "jw_disorder"
-    first, second, third = _sorted_slices(docs)
-    second.coalesce(1).write.parquet(str(d / "a"))
-    time.sleep(0.1)
-    first.coalesce(1).write.parquet(str(d / "b"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.snm_pair_partials_sorted(stream)
-        .writeStream.format("memory")
-        .queryName("jw_disorder")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(StreamingQueryException, match="sorted-arrival"):
-        q.awaitTermination(300)
-
-
-def test_fs_trained_classify_stream_equals_q208(spark, tmp_path):
-    """Streaming trained record linkage END-TO-END (35th twin): the
-    flagged pair stream (whole-block atomicity, the one shared
-    enumerator with the census kernel) through the IDENTICAL batch
-    fs_classify tail — census, 2 EM rounds, posterior broadcast —
-    must equal batch q208 row-for-row: the full trained-ER loop,
-    streamed, nothing re-implemented."""
-    from polla_spark.plans.llmdata import q208_fs_trained_classify
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "lang", "source", "n_chars", "text"
-    )
-    d = tmp_path / "fs_classify_stream"
-    for i, langs in enumerate([("de", "en"), ("es",), ("fr", "zh")]):
-        docs.filter(F.col("lang").isin(*langs)).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.fs_flagged_pair_partials(stream)
-        .writeStream.format("memory")
-        .queryName("fs_pair_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_fs_trained_classify(spark.table("fs_pair_updates"))
-    keys = ["doc_a", "doc_b", "w_dist", "w_ppm", "verdict"]
-    assert _rows(got, keys) == _rows(
-        q208_fs_trained_classify(spark, SF_DIR), keys
-    )
-    # twin #36 rides the same pair stream: entities (q214) are a
-    # deterministic function of the classified pairs, so the streamed
-    # entity census must equal batch q214 row-for-row too
-    from polla_spark.plans.llmdata import q214_er_entities
-
-    ent = SW.finish_er_entities(spark.table("fs_pair_updates"))
-    keys = ["entity", "size", "n_merged", "sum_members"]
-    assert _rows(ent, keys) == _rows(q214_er_entities(spark, SF_DIR), keys)
-    # twin #37 completes the arc: golden-record survivorship (q215)
-    # over the streamed entities against the static docs attribute
-    # table — the whole block→train→classify→cluster→merge loop is a
-    # deterministic function of the pair stream
-    from polla_spark.plans.llmdata import q215_golden_records
-
-    gold = SW.finish_golden_records(spark.table("fs_pair_updates"), docs)
-    keys = ["entity", "size", "rep_doc", "rep_chars",
-            "src_surv", "src_votes", "sum_chars"]
-    assert _rows(gold, keys) == _rows(q215_golden_records(spark, SF_DIR), keys)
-
-
-def test_hll_distinct_stream_equals_batch_sketch(spark, tmp_path, batch_events):
-    """Streaming HLL distinct sketches (20th twin): HLL union is
-    LOSSLESS (register-wise max), so the streamed estimate over a
-    multi-batch stream equals one batch sketch pass over the same
-    rows EXACTLY — plus the distributed-merge pin: per-partition
-    sketches unioned == direct sketch."""
-    from pyspark.sql import functions as F
-
-    ev = batch_events.select("event_id", "user_id", "event_type")
-    rows = ev.collect()
-    d = tmp_path / "hll_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], ev.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.distinct_partials(stream)
-        .writeStream.format("memory")
-        .queryName("hll_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["event_type"]: r["approx_distinct"]
-        for r in SW.finish_distinct(spark.table("hll_updates")).collect()
-    }
-    want = {
-        r["event_type"]: r["approx_distinct"]
-        for r in ev.groupBy("event_type")
-        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("approx_distinct"))
-        .collect()
-    }
-    assert got == want and got
-
-    # mergeability, distributed form: per-partition sketches unioned
-    # == one direct sketch (register-wise max is associative/lossless)
-    part = (
-        ev.repartition(8)
-        .withColumn("_pid", F.spark_partition_id())
-        .groupBy("event_type", "_pid")
-        .agg(F.hll_sketch_agg("user_id").alias("sketch"))
-    )
-    merged = {
-        r["event_type"]: r["approx_distinct"]
-        for r in part.groupBy("event_type")
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("approx_distinct"))
-        .collect()
-    }
-    assert merged == want
-
-
-def test_dedupe_stream(spark, stream_events, batch_events):
-    stream_out = SW.run_to_memory(
-        SW.dedupe_stream(stream_events, ["user_id", "event_type"]),
-        "t_dedupe",
-        "append",
-    )
-    # same cardinality as batch distinct; watermark never drops rows on
-    # ordered finite input
-    assert (
-        stream_out.select("user_id", "event_type").distinct().count()
-        == batch_events.select("user_id", "event_type").distinct().count()
-    )
-    assert stream_out.count() == stream_out.select("user_id", "event_type").distinct().count()
-
-
-def test_dedupe_stream_keeps_first_seen(spark, stream_events, batch_events):
-    """dedupe_stream must honor q103's first-seen contract: the
-    SURVIVING row per key is the earliest-ts event, not an arbitrary
-    member (the fixture's ts is monotone in file order, so stream
-    arrival order == ts order and first-arrival == first-seen)."""
-    from pyspark.sql import Window
-
-    stream_out = SW.run_to_memory(
-        SW.dedupe_stream(stream_events, ["user_id", "event_type"]),
-        "t_dedupe_first",
-        "append",
-    )
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    want = (
-        batch_events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    keys = ["user_id", "event_type", "event_id"]
-    assert _rows(stream_out, keys) == _rows(want, keys)
-
-
-def test_follow_within_stream_equals_batch(spark, stream_dir, batch_events):
-    """Stream-stream interval join (view -> click within 10 min) ==
-    the identical join run in batch. Two independent readStream
-    instances feed the two sides, as a real deployment would."""
-    lead = spark.readStream.schema(RAW_EVENTS).parquet(stream_dir)
-    follow = spark.readStream.schema(RAW_EVENTS).parquet(stream_dir)
-    stream_out = SW.run_to_memory(
-        SW.follow_within(lead, follow), "t_follow", "append"
-    )
-    batch_out = SW.follow_within(batch_events, batch_events)
-    keys = ["user_id", "lead_id", "follow_id", "lag_seconds"]
-    got, want = _rows(stream_out, keys), _rows(batch_out, keys)
-    assert got == want
-    assert len(got) > 0  # the fixture data must actually exercise the join
-
-
-def test_follow_within_left_outer_stream_equals_batch(spark, stream_dir, batch_events, tmp_path):
-    """Left-outer stream-stream join: unmatched leads must emit with a
-    null follow — but only after the watermark passes their window, so
-    a sentinel batch far in the future is appended to flush them. The
-    batch oracle is the same join on the original events only."""
-    import shutil
-
-    src = tmp_path / "follow_outer_src"
-    src.mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", src / "batch0.parquet")
-    lead = spark.readStream.schema(RAW_EVENTS).parquet(str(src))
-    follow = spark.readStream.schema(RAW_EVENTS).parquet(str(src))
-    out = SW.follow_within(lead, follow, how="left_outer")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_follow_outer")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # sentinels: far-future view+click events for users that exist
-        # on no other row (-1/-2, so they can never join). They must
-        # survive the per-side event_type filters — the watermark node
-        # sits AFTER the filter, so a row of any other type would be
-        # dropped before it could advance the watermark. Two sentinel
-        # batches: the watermark learned from batch N commits after N
-        # and evicts/emits in N+1, so batch-1's tail leads flush only
-        # once a later batch runs with the advanced watermark.
-        max_ts = batch_events.agg(F.max("ts")).collect()[0][0]
-        import datetime as dt
-
-        for i, days in enumerate((30, 60)):
-            far = max_ts + dt.timedelta(days=days)
-            spark.createDataFrame(
-                [
-                    (10**9 + i, far, -1, "view", 0.0, "{}"),
-                    (10**9 + 100 + i, far, -2, "click", 0.0, "{}"),
-                ],
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-            ).write.mode("append").parquet(str(src))
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    # drop the sentinel users before comparing with the batch oracle
-    got_df = spark.sql("SELECT * FROM t_follow_outer WHERE user_id >= 0")
-    keys = ["user_id", "lead_id", "follow_id", "lag_seconds"]
-    want = _rows(SW.follow_within(batch_events, batch_events, how="left_outer"), keys)
-    got = _rows(got_df, keys)
-    assert got == want
-    # the outer mode must actually add unmatched rows over inner
-    n_inner = SW.follow_within(batch_events, batch_events).count()
-    assert len(got) > n_inner
 
 
 def test_streaming_pipeline_decision_equals_batch(spark, tmp_path):
@@ -1018,111 +157,27 @@ def test_publish_gate_across_microbatches(spark, tmp_path):
     assert len(state_rows) == 2  # r1 and r3 advanced the state; r2 skipped
 
 
-def test_dedupe_within_watermark_equals_first_seen(spark, stream_events, batch_events):
-    """dropDuplicatesWithinWatermark: state is EVICTABLE (bounded on
-    unbounded streams, unlike plain dropDuplicates when keys exclude
-    event time); within one watermark horizon — which covers the whole
-    finite fixture — the output must equal batch first-seen exactly."""
-    from pyspark.sql import Window
+def test_kmv_finisher_aborts_on_reserved_scope(spark):
+    """q191's finisher guards its reserved union label
+    (functions/kmv.kmv_guard_reserved): a REAL scope literally named
+    'ALL' must abort loudly, not silently fold into the union sketch."""
+    from polla_spark.functions.kmv import kmv_estimate, kmv_guard_reserved, kmv_union
 
-    stream_out = SW.run_to_memory(
-        SW.dedupe_stream_within_watermark(
-            stream_events, ["user_id", "event_type"], watermark="30 days"
-        ),
-        "t_dedupe_within_wm",
-        "append",
+    per = spark.createDataFrame(
+        [("ALL", 1), ("ALL", 2), ("es", 4)], "scope string, h long"
     )
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    want = (
-        batch_events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    keys = ["user_id", "event_type", "event_id"]
-    assert _rows(stream_out, keys) == _rows(want, keys)
-
-
-def test_kmv_stream_equals_q191(spark, tmp_path):
-    """Streaming KMV build (26th twin): min-k is merge-closed, so the
-    stateful per-scope minima after a 3-batch document stream must be
-    IDENTICAL to the one-shot batch minima (hash for hash), and the
-    finisher's estimates — including the lossless 'ALL' union row —
-    must equal the batch estimator's. Kernels shared via
-    functions/kmv.py; docs are split round-robin so every scope's
-    token set genuinely fragments across micro-batches."""
-    from polla_spark.functions.kmv import kmv_estimate, kmv_minima, kmv_union
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
-    rows = docs.collect()
-    d = tmp_path / "kmv_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], docs.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    terms = stream.select(
-        F.col("lang").alias("scope"),
-        F.explode(F.split(F.col("text"), "\\s+")).alias("term"),
-    )
-    q = (
-        SW.kmv_partials(terms)
-        .writeStream.format("memory")
-        .queryName("kmv_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    updates = spark.table("kmv_updates")
-    # ≥2 micro-batches actually updated some scope (the stream was
-    # genuinely incremental, not one big batch)
-    assert updates.select("upd_seq").agg(F.max("upd_seq")).first()[0] >= 2
-
-    tok = docs.select(
-        F.col("lang").alias("scope"),
-        F.explode(F.split(F.col("text"), "\\s+")).alias("term"),
-    )
-    batch_minima = kmv_minima(tok)
-    streamed_latest = updates.groupBy("scope").agg(
-        F.max_by("minima", "upd_seq").alias("minima")
-    )
-    streamed_minima = streamed_latest.select(
-        "scope", F.explode("minima").alias("h")
-    )
-    keys = ["scope", "h"]
-    assert _rows(streamed_minima, keys) == _rows(batch_minima, keys)
-
-    got_est = SW.finish_kmv_estimate(updates)
-    want_est = kmv_estimate(batch_minima.unionByName(kmv_union(batch_minima)))
-    keys = ["scope", "n_kept", "h_k", "est"]
-    assert _rows(got_est, keys) == _rows(want_est, keys)
-
-
-def test_ols_trend_stream_equals_q193(spark, stream_events, batch_events):
-    """Streaming daily-revenue census (27th twin): cent sums are
-    merge-closed, so the update-mode census over the event stream,
-    max-collapsed, must feed the shared OLS report to exactly the
-    batch q193 result."""
-    from polla_spark.functions.trends import daily_type_census, ols_trend_report
-
-    stream_out = SW.run_to_memory(
-        SW.daily_revenue_partials(stream_events), "t_ols_daily", "update"
-    )
-    got = SW.finish_ols_trend(stream_out)
-    want = ols_trend_report(daily_type_census(batch_events))
-    keys = ["event_type", "n_days", "slope_num", "slope_den", "trend"]
-    assert _rows(got, keys) == _rows(want, keys)
+    with pytest.raises(Exception, match="reserved scope label"):
+        kmv_estimate(kmv_guard_reserved(per).unionByName(kmv_union(per))).collect()
+    # a frame without the label passes through unchanged
+    ok = per.filter("scope != 'ALL'")
+    assert [r["h"] for r in kmv_guard_reserved(ok).collect()] == [4]
 
 
 def test_audio_segments_stream_equals_q195(spark, tmp_path):
-    """Streaming audio segmentation (28th twin): the kernel is
-    stateless per asset, so streaming whole documents in 3 micro-
-    batches must yield exactly the batch segment set — ids, indexes,
-    times and segment BYTES identical."""
+    """q195's audio segmentation runs unchanged on a stream: the
+    kernel is stateless per asset, so streaming whole documents in 3
+    micro-batches must yield exactly the batch segment set — ids,
+    indexes, times and segment BYTES identical."""
     from polla_spark.operators.multimodal import documents_as_assets, segment_audio
     from polla_spark.session import read_table
 
@@ -1139,7 +194,7 @@ def test_audio_segments_stream_equals_q195(spark, tmp_path):
         .parquet(f"{d}/*/")
     )
     q = (
-        SW.audio_segment_stream(stream)
+        segment_audio(documents_as_assets(stream))
         .withColumn("shash", F.md5("segment"))
         .drop("segment")
         .writeStream.format("memory")
@@ -1159,124 +214,11 @@ def test_audio_segments_stream_equals_q195(spark, tmp_path):
     assert _rows(got, keys) == _rows(want, keys)
 
 
-def test_kmv_finisher_aborts_on_reserved_scope(spark):
-    """The streaming finisher shares batch q191's reserved-label guard
-    (functions/kmv.kmv_guard_reserved): a REAL scope literally named
-    'ALL' must abort loudly, not silently fold into the union sketch
-    (round-6 advice — batch/streaming twin semantics must not
-    diverge)."""
-    import pytest as _pytest
-
-    updates = spark.createDataFrame(
-        [("ALL", [1, 2, 3], 1), ("es", [4, 5], 1)],
-        "scope string, minima array<long>, upd_seq long",
-    )
-    with _pytest.raises(Exception, match="reserved scope label"):
-        SW.finish_kmv_estimate(updates).collect()
-
-
-def test_quantile_sketch_stream_within_bound(spark, tmp_path):
-    """Streaming KLL quantile sketch (29th twin): percentile_approx's
-    buffer IS the streaming aggregation state, so a 3-micro-batch
-    stream exercises the sketch's MERGE path across batch cuts. The
-    sketch value is merge-order-dependent (hence q202 is rows-only),
-    so the twin pins the documented contract instead of value
-    equality: the streamed sketch must pass the SAME exact-rank
-    verification as the batch sketch — shared kernel
-    functions/quantiles.rank_bound_verify, which aborts in-plan on a
-    violation — and the exact parts (n per group) must match batch
-    exactly."""
-    from polla_spark.functions.quantiles import (
-        QUANTILE_ACC,
-        approx_group_quantiles,
-        rank_bound_verify,
-    )
-    from polla_spark.session import read_table
-
-    events = read_table(spark, SF_DIR, "events").select("event_type", "value")
-    rows = events.collect()
-    d = tmp_path / "kll_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], events.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    streamed = SW.run_to_memory(
-        approx_group_quantiles(stream, "event_type", "value"),
-        "t_kll_quantiles",
-        "complete",
-    )
-    verified = rank_bound_verify(
-        streamed, events, "event_type", "value", QUANTILE_ACC,
-        tag="twin29 streamed",
-    )
-    got = verified.collect()  # abort inside collect() on violation
-    n_types = events.select("event_type").distinct().count()
-    assert len(got) == n_types * 3  # keys x pcts, all verified
-    assert all(r["verified"] for r in got)
-    # exact parts are exactly batch: per-key n
-    batch = approx_group_quantiles(events, "event_type", "value")
-    keys = ["event_type", "pct", "n"]
-    assert _rows(verified.select(*keys), keys) == _rows(
-        batch.select(*keys), keys
-    )
-
-
-def test_kmv_set_algebra_stream_equals_q203(spark, tmp_path):
-    """Streaming theta-sketch set algebra (30th twin): the pair
-    intersection/difference estimates are a deterministic function of
-    the per-scope minima, and min-k is merge-closed — so the streamed
-    3-batch build must yield estimates IDENTICAL to the one-shot
-    batch sketch's. Kernel shared via functions/kmv.kmv_set_algebra
-    (batch q203 adds only the truth-census columns on top)."""
-    from polla_spark.functions.kmv import kmv_minima, kmv_set_algebra
-    from polla_spark.plans.llmdata import _with_shingle_sets
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
-    rows = docs.collect()
-    d = tmp_path / "kmv_sa_stream"
-    for i in range(3):
-        spark.createDataFrame(rows[i::3], docs.schema).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    terms = _with_shingle_sets(stream).select(
-        F.col("lang").alias("scope"), F.explode("sh").alias("term")
-    )
-    q = (
-        SW.kmv_partials(terms)
-        .writeStream.format("memory")
-        .queryName("kmv_sa_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    updates = spark.table("kmv_sa_updates")
-    assert updates.select("upd_seq").agg(F.max("upd_seq")).first()[0] >= 2
-
-    streamed = SW.finish_kmv_set_algebra(updates)
-    tok = _with_shingle_sets(docs).select(
-        F.col("lang").alias("scope"), F.explode("sh").alias("term")
-    )
-    want = kmv_set_algebra(kmv_minima(tok))
-    keys = ["lang_a", "lang_b", "theta", "n_ab", "n_a", "est_common", "est_only_a"]
-    assert _rows(streamed, keys) == _rows(want, keys)
-
-
 def test_ahash_band_stream_equals_batch(spark, tmp_path):
-    """Streaming perceptual-hash bands (31st twin): the aHash kernel
-    is stateless per asset, so the streamed band table over a 3-batch
-    document stream equals the batch table band for band."""
+    """q205's perceptual-hash bands run unchanged on a stream: the
+    aHash kernel is stateless per asset, so the streamed band table
+    over a 3-batch document stream equals the batch table band for
+    band."""
     from polla_spark.operators.multimodal import ahash_bands, documents_as_assets
     from polla_spark.session import read_table
 
@@ -1294,290 +236,19 @@ def test_ahash_band_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{d}/*/")
     )
-    streamed = SW.run_to_memory(
-        SW.ahash_band_stream(stream), "t_ahash_bands", "append"
+    q = (
+        ahash_bands(documents_as_assets(stream))
+        .writeStream.format("memory")
+        .queryName("t_ahash_bands")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination(300)
+    streamed = spark.table("t_ahash_bands")
     want = ahash_bands(documents_as_assets(docs))
     keys = ["asset_id", "b0", "b1", "b2", "b3"]
     assert _rows(streamed, keys) == _rows(want, keys)
-
-
-def test_tokenizer_fertility_stream_equals_q223(spark, tmp_path):
-    """Streaming tokenizer fertility (38th twin) == batch q223 over a
-    multi-batch documents stream: the word census is count-merge-
-    closed, and the trained merges + fertility report are a
-    deterministic function of the merged census, so the streamed
-    report equals batch row-for-row — the whole train->apply->
-    evaluate tail runs through the ONE shared bpe_fertility_report."""
-    from polla_spark.plans.llmdata import q223_tokenizer_fertility
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    d = tmp_path / "bpe_stream"
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.bpe_census_partials(stream)
-        .writeStream.format("memory")
-        .queryName("bpe_census_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_tokenizer_fertility(spark.table("bpe_census_updates"))
-    keys = ["n_tok", "n_words", "corpus_cnt", "pct_ppm",
-            "tokens_per_word_ppm", "chars_per_token_ppm"]
-    assert _rows(got, keys) == _rows(
-        q223_tokenizer_fertility(spark, SF_DIR), keys
-    )
-
-
-def test_kmeans_training_stream_equals_q212(spark, tmp_path):
-    """Streamed k-means TRAINING (39th twin) == batch q212 over a
-    multi-batch embeddings stream: the seed census (min/min_by) and
-    each round's (cid, pos) sum/count census are merge-closed aggs
-    streamed through the IDENTICAL shared kernels q212 unrolls
-    (_lloyd_assign -> _lloyd_update_plan); the identical floor-mean
-    update (_lloyd_new_dims) runs in the finisher. The streamed
-    round-by-round stats table equals batch q212 row-for-row —
-    closing the streaming arc over the last trained component."""
-    from polla_spark.plans.llmdata import (
-        _LLOYD_ROUNDS,
-        _lloyd_stats_row,
-        q212_kmeans_train,
-    )
-    from polla_spark.session import read_table
-
-    vecs = read_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    d = tmp_path / "kmeans_stream"
-    for i in range(3):
-        vecs.filter(F.col("vec_id") % 3 == i).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-
-    def _stream():
-        return (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/*/")
-        )
-
-    def _drain(df, name):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.table(name)
-
-    cents = SW.finish_lloyd_seeds(
-        _drain(SW.lloyd_seed_partials(_stream()), "t39_seeds")
-    )
-    stats = [_lloyd_stats_row(0, cid, 0, dm, dm) for cid, dm in cents]
-    for rnd in range(1, _LLOYD_ROUNDS + 1):
-        upd = _drain(SW.lloyd_census_partials(_stream(), cents), f"t39_r{rnd}")
-        new, members = SW.finish_lloyd_round(upd, cents)
-        stats.extend(
-            _lloyd_stats_row(rnd, cid, members[cid], nd, pd)
-            for (cid, nd), (_, pd) in zip(new, cents)
-        )
-        cents = new
-    got = sorted(tuple(int(v) for v in row) for row in stats)
-    want = sorted(
-        tuple(int(v) for v in r) for r in q212_kmeans_train(spark, SF_DIR).collect()
-    )
-    assert got == want
-
-
-def test_perceptron_training_stream_equals_q224(spark, tmp_path):
-    """Streamed perceptron TRAINING (40th twin) == batch q224 over a
-    multi-batch documents stream: each epoch's (n_miss, d0..d3)
-    census is a merge-closed global agg streamed through the
-    identical shared kernels (pct_features_from -> _pct_epoch_agg);
-    the identical weight update runs in the finisher. The streamed
-    epoch table equals batch q224 row-for-row."""
-    from polla_spark.plans.llmdata import _PCT_EPOCHS, q224_perceptron_quality
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
-    )
-    d = tmp_path / "pct_stream"
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-
-    def _stream():
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/*/")
-        )
-
-    def _drain(df, name):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.table(name)
-
-    w = [0, 0, 0, 0]
-    rows = [(0, 0, *w)]
-    for e in range(1, _PCT_EPOCHS + 1):
-        upd = _drain(
-            SW.perceptron_epoch_partials(_stream().drop("doc_id"), w),
-            f"t40_e{e}",
-        )
-        n_miss, w = SW.finish_perceptron_epoch(upd, w)
-        rows.append((e, int(n_miss), *[int(v) for v in w]))
-    want = sorted(
-        tuple(int(v) for v in r)
-        for r in q224_perceptron_quality(spark, SF_DIR).collect()
-    )
-    assert sorted(rows) == want
-
-
-def test_source_quality_stream_equals_q226(spark, tmp_path):
-    """Streamed source-quality census (41st twin) == batch q226: the
-    (source, n_docs, n_pass) counts are merge-closed, and the
-    Wilson-LCB leaderboard is a deterministic function of the merged
-    census — streamed report equals batch row-for-row through the
-    ONE shared source_quality_leaderboard."""
-    from polla_spark.plans.llmdata import q226_source_quality_lcb
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    d = tmp_path / "srcq_stream"
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    q = (
-        SW.source_quality_partials(stream)
-        .writeStream.format("memory")
-        .queryName("srcq_updates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = SW.finish_source_quality(spark.table("srcq_updates"))
-    keys = ["source", "n_docs", "n_pass", "pass_ppm", "wilson_lb_ppm"]
-    assert _rows(got, keys) == _rows(q226_source_quality_lcb(spark, SF_DIR), keys)
-
-
-def _doc_stream(spark, tmp_path, name, cols):
-    """Stage documents as a 3-file stream split on doc_id % 3
-    (batches 1, 2, then 0 — the q227 'delta' split last)."""
-    from polla_spark.session import read_table
-
-    docs = read_table(spark, SF_DIR, "documents").select(*cols)
-    d = tmp_path / name
-    for part, i in enumerate([1, 2, 0]):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.parquet(
-            str(d / f"part{part}")
-        )
-    return docs, (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-
-
-def _drain_update(spark, df, name):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
-
-
-def test_embedding_drift_stream_equals_q229(spark, tmp_path):
-    """Streamed embedding-drift census (43rd twin) == batch q229: the
-    (is_new, pos, s127, n) sums are merge-closed over a fixed 128-key
-    space, and the report is a deterministic census function —
-    streamed ≡ batch through the ONE shared
-    embedding_drift_census_from / embedding_drift_report pair."""
-    from polla_spark.plans.llmdata import q229_embedding_drift
-    from polla_spark.session import read_table
-
-    vecs = read_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    d = tmp_path / "drift_stream"
-    for i in range(3):
-        vecs.filter(F.col("vec_id") % 3 == i).coalesce(1).write.parquet(
-            str(d / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*/")
-    )
-    upd = _drain_update(spark, SW.embedding_drift_partials(stream), "t43_updates")
-    got = SW.finish_embedding_drift(upd)
-    keys = ["pos", "old_mean127_ppm", "new_mean127_ppm", "delta_ppm"]
-    assert _rows(got, keys) == _rows(q229_embedding_drift(spark, SF_DIR), keys)
-
-
-def test_length_drift_stream_equals_q230(spark, tmp_path):
-    """Streamed length-bucket census (44th twin) == batch q230: both
-    per-bucket counts are monotone, the chi-square is census-side —
-    streamed ≡ batch through the ONE shared length_census_from /
-    length_drift_report pair."""
-    from polla_spark.plans.llmdata import q230_length_drift_chi2
-
-    _, stream = _doc_stream(spark, tmp_path, "len_stream", ["doc_id", "n_chars"])
-    upd = _drain_update(spark, SW.length_census_partials(stream), "t44_updates")
-    got = SW.finish_length_drift(upd)
-    keys = ["bucket", "n_old", "n_new", "old_ppm", "new_ppm", "chi2_ppb"]
-    assert _rows(got, keys) == _rows(q230_length_drift_chi2(spark, SF_DIR), keys)
-
-
-def test_dsir_stream_equals_q225(spark, tmp_path):
-    """Streamed DSIR census (45th twin) == batch q225: the 256-bucket
-    (cr, ct) census streams merge-closed; the finisher runs the
-    IDENTICAL weight-table + scoring tail against the static corpus
-    (the twin-#37 pattern: estimate from the stream, score as a
-    deterministic function of it)."""
-    from polla_spark.plans.llmdata import q225_dsir_importance
-    from polla_spark.session import read_table
-
-    docs, stream = _doc_stream(
-        spark, tmp_path, "dsir_stream", ["doc_id", "text", "lang"]
-    )
-    upd = _drain_update(spark, SW.dsir_census_partials(stream), "t45_updates")
-    full_docs = read_table(spark, SF_DIR, "documents")
-    got = SW.finish_dsir_importance(upd, full_docs)
-    keys = ["doc_id", "n_bigrams", "importance_ppm"]
-    assert _rows(got, keys) == _rows(q225_dsir_importance(spark, SF_DIR), keys)
 
 
 def test_stateful_lsh_stream_equals_q227(spark, tmp_path):
@@ -1625,56 +296,6 @@ def test_stateful_lsh_stream_equals_q227(spark, tmp_path):
     full = q53_lsh_candidate_pairs(spark, SF_DIR)
     assert _rows(emitted, ["id_a", "id_b"]) == _rows(full, ["id_a", "id_b"])
     spark.catalog.clearCache()
-
-
-def test_vocab_overlap_stream_equals_q232(spark, tmp_path):
-    """Streamed (source, term) vocabulary census (49th twin) == batch
-    q232: the merge-closed counts prove key existence, the finisher's
-    distinct is state-collapse not re-derivation, and the Jaccard
-    matrix is the IDENTICAL shared report — streamed ≡ batch through
-    the ONE source_term_census_from / vocab_overlap_report pair."""
-    from polla_spark.plans.llmdata import q232_source_vocab_overlap
-
-    _, stream = _doc_stream(
-        spark, tmp_path, "vocab_stream", ["doc_id", "text", "source"]
-    )
-    upd = _drain_update(spark, SW.source_vocab_partials(stream), "t49_updates")
-    got = SW.finish_vocab_overlap(upd)
-    keys = ["source_a", "source_b", "v_a", "v_b", "n_common", "jaccard_ppm"]
-    assert _rows(got, keys) == _rows(
-        q232_source_vocab_overlap(spark, SF_DIR), keys
-    )
-
-
-def test_novelty_stream_equals_q235(spark, tmp_path):
-    """Streamed per-doc novelty (50th twin) == batch q235: the delta
-    stream's row-local distinct bigrams join the STATIC history
-    vocabulary (stream-static left join) and the finisher runs the
-    identical ppm + top-K report — streamed ≡ batch through the ONE
-    novelty_partials_from / novelty_report pair."""
-    from polla_spark.plans.llmdata import (
-        bigram_rows_from,
-        q235_bigram_novelty,
-    )
-    from polla_spark.session import read_table
-
-    docs, stream = _doc_stream(
-        spark, tmp_path, "novelty_stream", ["doc_id", "text"]
-    )
-    full = read_table(spark, SF_DIR, "documents")
-    old_vocab = (
-        bigram_rows_from(full.filter(F.pmod("doc_id", F.lit(3)) != 0))
-        .select("term")
-        .distinct()
-        .withColumn("seen", F.lit(1))
-    )
-    delta_stream = stream.filter(F.pmod("doc_id", F.lit(3)) == 0)
-    upd = _drain_update(
-        spark, SW.novelty_partials(delta_stream, old_vocab), "t50_updates"
-    )
-    got = SW.finish_novelty(upd)
-    keys = ["doc_id", "n_bigrams", "n_novel", "novelty_ppm"]
-    assert _rows(got, keys) == _rows(q235_bigram_novelty(spark, SF_DIR), keys)
 
 
 def test_incremental_components_stream_equals_q67(spark, tmp_path):
@@ -1729,37 +350,3 @@ def test_incremental_components_stream_equals_q67(spark, tmp_path):
         q236_cluster_size_histogram(spark, SF_DIR), hkeys
     )
     spark.catalog.clearCache()
-
-
-def test_quality_tertiles_stream_equals_q231(spark, tmp_path):
-    """Streamed quality histogram (46th twin) == batch q231: the
-    (lang, score_ppm) doc/token counts are merge-closed and the
-    tertile bucketing is a deterministic histogram function —
-    streamed ≡ batch through the ONE shared quality_hist_from /
-    quality_tertiles_report pair."""
-    from polla_spark.plans.llmdata import q231_perplexity_buckets
-
-    _, stream = _doc_stream(
-        spark, tmp_path, "qtert_stream", ["doc_id", "text", "lang"]
-    )
-    upd = _drain_update(spark, SW.quality_hist_partials(stream), "t46_updates")
-    got = SW.finish_quality_tertiles(upd)
-    keys = ["lang", "bucket", "n_docs", "sum_tokens",
-            "lo_score_ppm", "hi_score_ppm"]
-    assert _rows(got, keys) == _rows(q231_perplexity_buckets(spark, SF_DIR), keys)
-
-
-def test_zipf_head_stream_equals_q234(spark, tmp_path):
-    """Streamed term census (47th twin) == batch q234: vocabulary-
-    bounded merge-closed counts; the top-K + shares report is a
-    deterministic census function — streamed ≡ batch through the ONE
-    shared term_census_from / zipf_head_report pair."""
-    from polla_spark.plans.llmdata import q234_zipf_head_profile
-
-    _, stream = _doc_stream(
-        spark, tmp_path, "zipf_stream", ["doc_id", "text"]
-    )
-    upd = _drain_update(spark, SW.term_census_partials(stream), "t47_updates")
-    got = SW.finish_zipf_head(upd)
-    keys = ["rank", "term", "cnt", "share_ppm", "cum_share_ppm"]
-    assert _rows(got, keys) == _rows(q234_zipf_head_profile(spark, SF_DIR), keys)
