@@ -140,11 +140,6 @@ def _date_from(text: Column) -> Column:
     return F.coalesce(cand1, cand2)
 
 
-def spanish_date_col(text: Column) -> Column:
-    """DATE column from free text (native regex + month map)."""
-    return _date_from(text)
-
-
 def sorteo_col(text: Column) -> Column:
     """BIGINT draw number from free text, NULL when absent."""
     raw = F.regexp_extract(text, _J_SORTEO, 1)

@@ -27,7 +27,7 @@ import html as _htmllib
 import re
 from html.parser import HTMLParser
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import ParseError
@@ -166,11 +166,6 @@ def amounts_long(
         .filter(~((F.col("raw") == "") & (F.col("categoria") == TOTAL_LABEL)))
         .drop("_p")
     )
-
-
-def sha256_col(content: Column) -> Column:
-    """Provenance/dedup content hash (reference net.py:36-38) — native."""
-    return F.sha2(content, 256)
 
 
 def unescape(text: str) -> str:

@@ -1,4 +1,4 @@
-"""Explicit StructType schemas for every record shape in the engine.
+"""Explicit StructType schemas for the records the daily pipeline reads.
 
 Derived from the reference's observed record shapes (SURVEY.md §1.1):
 - source payload: reference polla_app/sources/pozos.py:248-257,429-438
@@ -6,8 +6,6 @@ Derived from the reference's observed record shapes (SURVEY.md §1.1):
   ``source_priority`` column — the reference's consensus tie-break is
   Python-dict insertion order (pipeline.py:82-85,163-165); under Spark
   parallelism that ordering must be materialized as data.
-- normalized record: pipeline.py:409-417
-- mismatch record: pipeline.py:183-201
 - state row: pipeline.py:431-437 (fields used by _compute_unchanged,
   pipeline.py:257-285)
 
@@ -18,8 +16,6 @@ CLP amounts are LongType everywhere: test amounts reach 1.2e12
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-API_VERSION = "v1.2"  # reference polla_app/contracts.py:6
 
 #: The 9 category labels the reference extracts
 #: (reference polla_app/sources/pozos.py:20-33).
@@ -55,102 +51,9 @@ SOURCE_PAYLOAD = T.StructType(
     ]
 )
 
-#: Long/exploded working form — what the consensus engine aggregates
-#: (reference pipeline.py:149-157 iterates dict items; we explode to rows).
-PAYLOAD_LONG = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("source_name", T.StringType(), False),
-        T.StructField("source_priority", T.IntegerType(), False),
-        T.StructField("categoria", T.StringType(), False),
-        T.StructField("valor", T.LongType(), False),
-    ]
-)
-
 # ---------------------------------------------------------------------------
-# Consensus / decision outputs
+# Decision state
 # ---------------------------------------------------------------------------
-
-PROVENANCE_DESCRIPTOR = T.StructType(
-    [
-        # reference pipeline.py:208-216
-        T.StructField("source_name", T.StringType(), False),
-        T.StructField("fuente", T.StringType(), False),
-        T.StructField("fetched_at", T.TimestampType(), False),
-        T.StructField("sha256", T.StringType(), False),
-        T.StructField("user_agent", T.StringType(), True),
-        T.StructField("estimado", T.BooleanType(), False),
-        T.StructField("sorteo", T.LongType(), True),
-        T.StructField("fecha", T.DateType(), True),
-    ]
-)
-
-NORMALIZED_RECORD = T.StructType(
-    [
-        # reference pipeline.py:409-417
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("api_version", T.StringType(), False),
-        T.StructField("sorteo", T.LongType(), True),
-        T.StructField("fecha", T.DateType(), True),
-        T.StructField("fuente", T.StringType(), True),
-        T.StructField("confidence", T.StringType(), False),
-        T.StructField(
-            "premios",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        # legacy shape, always [] in current pipeline
-                        # (reference publish.py:80-92)
-                        T.StructField("categoria", T.StringType(), False),
-                        T.StructField("premio_clp", T.LongType(), False),
-                        T.StructField("ganadores", T.LongType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-        T.StructField("pozos_proximo", T.MapType(T.StringType(), T.LongType()), False),
-        T.StructField(
-            "provenance",
-            T.StructType(
-                [
-                    T.StructField(
-                        "pozos",
-                        T.StructType(
-                            [
-                                T.StructField("primary", PROVENANCE_DESCRIPTOR, True),
-                                T.StructField(
-                                    "alternatives",
-                                    T.ArrayType(PROVENANCE_DESCRIPTOR),
-                                    False,
-                                ),
-                            ]
-                        ),
-                        False,
-                    )
-                ]
-            ),
-            False,
-        ),
-    ]
-)
-
-MISMATCH_RECORD = T.StructType(
-    [
-        # reference pipeline.py:183-201
-        T.StructField("categoria", T.StringType(), False),
-        T.StructField("winner_valor", T.LongType(), False),
-        T.StructField("winner_voters", T.ArrayType(T.StringType()), False),
-        T.StructField(
-            "disagreeing",
-            # valor (as string, JSON-key parity) -> sorted voter list
-            T.MapType(T.StringType(), T.ArrayType(T.StringType())),
-            False,
-        ),
-        T.StructField("max_deviation", T.DoubleType(), True),
-        T.StructField("missing_sources", T.ArrayType(T.StringType()), False),
-    ]
-)
 
 STATE_ROW = T.StructType(
     [
@@ -159,61 +62,5 @@ STATE_ROW = T.StructType(
         T.StructField("fecha", T.DateType(), True),
         T.StructField("primary_sha256", T.StringType(), True),
         T.StructField("pozos_proximo", T.MapType(T.StringType(), T.LongType()), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Testdata schemas (explicit — no inference on the oracle substrate)
-# ---------------------------------------------------------------------------
-
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), False),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
-# Multimodal asset table (engine-native; no reference analog — SURVEY §2.6
-# extensions). Media payloads are opaque binary + typed metadata.
-MEDIA_ASSET = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
     ]
 )

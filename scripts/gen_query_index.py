@@ -5,8 +5,10 @@ from the code (tests/test_registry.py pins the sync)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from polla_spark.plans import ROWS_ONLY_QUERIES, registry  # noqa: E402
 
@@ -32,6 +34,6 @@ def render() -> str:
 
 
 if __name__ == "__main__":
-    with open("/root/repo/docs/QUERIES.md", "w") as fh:
+    with open(ROOT / "docs" / "QUERIES.md", "w") as fh:
         fh.write(render())
     print("wrote docs/QUERIES.md")

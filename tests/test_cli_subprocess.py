@@ -9,17 +9,23 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def run_cli(*args: str, env: dict | None = None) -> subprocess.CompletedProcess:
+    """Run the CLI in a child. Its cache dir cannot be created (a path
+    under a file), so a child that launches a JVM launches plain and
+    never builds a class archive at exit, which the timeout would cut."""
     import os
 
-    full_env = {**os.environ, **(env or {})}
+    full_env = {**os.environ, "XDG_CACHE_HOME": os.devnull, **(env or {})}
     return subprocess.run(
         [sys.executable, "-m", "polla_spark", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
         env=full_env,
     )

@@ -10,10 +10,11 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
 
 SCRIPT = r"""
-import sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "8")
@@ -43,7 +44,7 @@ def test_timestamp_plans_survive_a_vanilla_driver_session():
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "FOREIGN_OK" in r.stdout

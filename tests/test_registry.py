@@ -4,6 +4,8 @@ on (a truncated sweep must still sample every family)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from polla_spark.plans import (
     DECLARED_QUERY_COUNT,
     ROWS_ONLY_QUERIES,
@@ -116,7 +118,7 @@ def test_rows_only_queries_certify_from_no_oracle_rows():
     rounds = _certified_rounds()
     # find, straight from the artifacts, every rows-only green row —
     # derive the artifact root exactly like the implementation does so
-    # the test holds in any checkout location, not just /root/repo
+    # the test holds in any checkout location
     root = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(plans.__file__)))
     )
@@ -188,10 +190,11 @@ def test_query_index_doc_in_sync():
     memory and require byte equality so the index can never drift."""
     import importlib.util
 
+    root = Path(__file__).resolve().parent.parent
     spec = importlib.util.spec_from_file_location(
-        "gen_query_index", "/root/repo/scripts/gen_query_index.py"
+        "gen_query_index", root / "scripts" / "gen_query_index.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    with open("/root/repo/docs/QUERIES.md") as fh:
+    with open(root / "docs" / "QUERIES.md") as fh:
         assert fh.read() == mod.render()
