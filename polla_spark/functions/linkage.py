@@ -152,120 +152,62 @@ EM_INIT = {"p": 100_000, "m": 700_000, "u": 300_000}
 LINK_PPM, POSSIBLE_PPM = 900_000, 100_000
 
 _N = len(FS_FIELDS)
-_DEC = "CAST({} AS DECIMAL(38,0))"
 
 
-def _pm_pu_exprs(prefix: str = "") -> tuple[str, str]:
-    """The E-step's two product terms as Spark SQL strings over a
-    frame carrying g1..g4 and {prefix}p/m_k/u_k ppm columns."""
-    def term(g: str, m: str) -> str:
-        return f"(CASE WHEN {g} = 1 THEN {m} ELSE {PPM} - {m} END)"
-
-    pm = _DEC.format(f"{prefix}p")
-    pu = _DEC.format(f"{PPM} - {prefix}p")
-    for k in range(1, _N + 1):
-        pm += f" * {term(f'g{k}', f'{prefix}m{k}')}"
-        pu += f" * {term(f'g{k}', f'{prefix}u{k}')}"
-    return pm, pu
-
-
-def fs_posterior_expr(prefix: str = "") -> str:
-    """Spark SQL expr: the pattern's ppm match posterior
-    w = p·Πm · 10^6 div (p·Πm + (1−p)·Πu) — the E-step weight AND
-    q208's classification score (same algebra, trained params)."""
-    pm, pu = _pm_pu_exprs(prefix)
-    return f"CAST(({pm}) * {PPM} div (({pm}) + ({pu})) AS LONG)"
-
-
-def fs_em_round(census: DataFrame, params: DataFrame) -> DataFrame:
-    """One Winkler EM round in exact ppm integers.
-
-    ``census``: (g1..g4, c) agreement-pattern counts (≤2^4 rows);
-    ``params``: 1-row (p, m1..m4, u1..u4) ppm frame. Returns the next
-    round's 1-row params frame. All data-sized work happened in the
-    census — this runs on ≤16 rows × a broadcast 1-row frame, so
-    iteration cost is independent of corpus size.
-    """
-    j = census.crossJoin(F.broadcast(params))
-    w = j.withColumn("w", F.expr(fs_posterior_expr()))
-    agg = [
-        F.expr(f"CAST(sum({_DEC.format('w')} * c) AS DECIMAL(38,0))").alias("sw"),
-        F.expr(
-            f"CAST(sum({_DEC.format(f'{PPM} - w')} * c) AS DECIMAL(38,0))"
-        ).alias("snw"),
-        F.sum("c").alias("n"),
-    ]
-    for k in range(1, _N + 1):
-        agg.append(F.expr(
-            f"CAST(sum({_DEC.format('w')} * c * g{k}) AS DECIMAL(38,0))"
-        ).alias(f"swg{k}"))
-        agg.append(F.expr(
-            f"CAST(sum({_DEC.format(f'{PPM} - w')} * c * g{k}) AS DECIMAL(38,0))"
-        ).alias(f"snwg{k}"))
-    stats = w.agg(*agg)
-    return stats.select(
-        F.expr("CAST(sw div n AS LONG)").alias("p"),
-        *[
-            F.expr(f"CAST(swg{k} * {PPM} div sw AS LONG)").alias(f"m{k}")
-            for k in range(1, _N + 1)
-        ],
-        *[
-            F.expr(f"CAST(snwg{k} * {PPM} div snw AS LONG)").alias(f"u{k}")
-            for k in range(1, _N + 1)
-        ],
-    )
+def _div(a: int | None, b: int | None) -> int | None:
+    """Spark's (non-ANSI) and DuckDB's integer ``div`` on non-negatives:
+    NULL when either side is NULL or the divisor is 0."""
+    return None if a is None or not b else a // b
 
 
 def fs_em_params_py(
-    census_rows: list[tuple], rounds: int = 2
-) -> list[dict[str, int]]:
-    """DRIVER-side twin of the :func:`fs_em_round` recursion: the same
-    Winkler EM in exact ppm integers over an already-collected census,
-    in pure Python (r13, guide §1.2). Python ints are arbitrary
-    precision, every operand is non-negative, and ``//`` (floor) equals
-    Spark's DECIMAL ``div`` (truncate) on non-negatives, so the params
-    are BIT-identical to the LocalRelation recursion — pinned against
-    :func:`fs_em_round` on crafted and corpus censuses in
-    tests/test_fs_em_py.py. Why it exists: the LocalRelation form
-    re-embedded ~14 exchanges of BroadcastNestedLoopJoin/HashAggregate
-    plan per EM round into EVERY downstream action (measured r13:
-    q215's final plan carried 110 Exchange mentions, 6 copies of the
-    EM chain), all to reduce ≤2^N rows the driver already holds.
+    census_rows: list, rounds: int = 2
+) -> list[dict[str, int | None]]:
+    """The Winkler EM in exact ppm integers over an already-collected
+    census, in pure Python on the driver (r13, guide §1.2). Python ints
+    are arbitrary precision, every operand is non-negative, and ``//``
+    (floor) equals Spark's DECIMAL ``div`` (truncate) on non-negatives,
+    so the params are BIT-identical to the Spark expression form this
+    replaced — pinned against that form, kept as the reference in
+    tests/test_fs_em_py.py, on crafted and corpus censuses. Why it
+    exists: the LocalRelation form re-embedded ~14 exchanges of
+    BroadcastNestedLoopJoin/HashAggregate plan per EM round into EVERY
+    downstream action (measured r13: q215's final plan carried 110
+    Exchange mentions, 6 copies of the EM chain), all to reduce ≤2^N
+    rows the driver already holds.
 
-    ``census_rows``: (g1..gN, c) tuples/Rows. Returns the param dicts
-    (keys ``p``, ``m1..mN``, ``u1..uN``) for init + each round. A zero
-    divisor yields ``None`` for that field, mirroring Spark's NULL on
-    decimal div-by-zero (degenerate censuses only)."""
-    census = [
-        (tuple(int(r[k]) for k in range(_N)), int(r[_N])) for r in census_rows
-    ]
-    params: dict[str, int] = {
+    ``census_rows``: Rows (or mappings) with fields ``g1..gN``
+    (:func:`fs_census_flag_cols`) and ``c``, read by name in any column
+    order. Returns the param dicts (keys ``p``, ``m1..mN``, ``u1..uN``)
+    for init + each round. Degenerate censuses get SQL's NULLs, never
+    an exception: a zero divisor yields ``None`` for that field, a
+    pattern whose posterior is ``None`` drops out of the sums (as a SQL
+    ``sum`` skips NULL terms), and a sum with no terms left is
+    ``None``."""
+    gcols = fs_census_flag_cols()
+    census = [(tuple(int(r[g]) for g in gcols), int(r["c"])) for r in census_rows]
+    params: dict[str, int | None] = {
         "p": EM_INIT["p"],
         **{f"m{k}": EM_INIT["m"] for k in range(1, _N + 1)},
         **{f"u{k}": EM_INIT["u"] for k in range(1, _N + 1)},
     }
     out = [dict(params)]
     for _ in range(rounds):
-        sw = snw = n = 0
-        swg = [0] * _N
-        snwg = [0] * _N
-        for gs, c in census:
-            w = fs_posterior_ppm_py(gs, params)
-            sw += w * c
-            snw += (PPM - w) * c
-            n += c
-            for i, g in enumerate(gs):
-                if g:
-                    swg[i] += w * c
-                    snwg[i] += (PPM - w) * c
+        n = sum(c for _, c in census)
+        live = [
+            (gs, c, w) for gs, c in census
+            if (w := fs_posterior_ppm_py(gs, params)) is not None
+        ]
+        sw = sum(w * c for _, c, w in live) if live else None
+        snw = sum((PPM - w) * c for _, c, w in live) if live else None
         params = {
-            "p": sw // n if n else None,
+            "p": _div(sw, n),
             **{
-                f"m{k}": (swg[k - 1] * PPM // sw if sw else None)
+                f"m{k}": _div(sum(w * c for gs, c, w in live if gs[k - 1]) * PPM, sw)
                 for k in range(1, _N + 1)
             },
             **{
-                f"u{k}": (snwg[k - 1] * PPM // snw if snw else None)
+                f"u{k}": _div(sum((PPM - w) * c for gs, c, w in live if gs[k - 1]) * PPM, snw)
                 for k in range(1, _N + 1)
             },
         }
@@ -273,28 +215,20 @@ def fs_em_params_py(
     return out
 
 
-def fs_posterior_ppm_py(gs: tuple, params: dict[str, int]) -> int:
-    """DRIVER-side twin of :func:`fs_posterior_expr`: the pattern's
-    ppm match posterior w = p·Πm·10^6 // (p·Πm + (1−p)·Πu) in exact
-    Python ints (same non-negative floor-div argument as
-    :func:`fs_em_params_py`, pinned by the same test)."""
+def fs_posterior_ppm_py(gs: tuple, params: dict[str, int | None]) -> int | None:
+    """The pattern's ppm match posterior w = p·Πm·10^6 // (p·Πm +
+    (1−p)·Πu) in exact Python ints (same non-negative floor-div
+    argument as :func:`fs_em_params_py`, pinned by the same test).
+    ``gs`` holds the pattern's g1..gN in order. ``None``, as SQL gives
+    NULL, when a parameter is ``None`` or both products are 0."""
+    if any(v is None for v in params.values()):
+        return None
     pm = params["p"]
     pu = PPM - params["p"]
     for k in range(1, _N + 1):
         pm *= params[f"m{k}"] if gs[k - 1] == 1 else PPM - params[f"m{k}"]
         pu *= params[f"u{k}"] if gs[k - 1] == 1 else PPM - params[f"u{k}"]
-    return pm * PPM // (pm + pu)
-
-
-def fs_init_params(spark) -> DataFrame:
-    """The 1-row ppm prior frame (:data:`EM_INIT`)."""
-    cols = "p long, " + ", ".join(
-        f"m{k} long" for k in range(1, _N + 1)
-    ) + ", " + ", ".join(f"u{k} long" for k in range(1, _N + 1))
-    return spark.createDataFrame(
-        [(EM_INIT["p"], *([EM_INIT["m"]] * _N), *([EM_INIT["u"]] * _N))],
-        cols,
-    )
+    return _div(pm * PPM, pm + pu)
 
 
 def fs_param_cols() -> list[str]:
@@ -322,7 +256,7 @@ def fs_em_report(spark, census: DataFrame, rounds: int = 2) -> DataFrame:
     r12 materialized the census (≤2^N rows by construction)
     DRIVER-side so the EM recursion ran over LocalRelations; r13 runs
     the recursion ITSELF on the driver (:func:`fs_em_params_py`,
-    bit-pinned against the :func:`fs_em_round` expression form): the
+    bit-pinned against the expression form in tests/test_fs_em_py.py): the
     LocalRelation recursion still planned ~2 exchanges + a
     BroadcastNestedLoopJoin per round into the report action — ~8
     scheduled stages for ≤16 rows of state (measured r13: q207 11
@@ -390,13 +324,8 @@ def fs_classify(spark, flags: DataFrame, *, ordered: bool = True) -> DataFrame:
     census_lazy = flags.groupBy(*gcols).agg(F.count("*").alias("c"))
     census_rows = census_lazy.collect()
     r2 = fs_em_params_py(census_rows, rounds=2)[-1]
-    post_rows = [
-        tuple(
-            [int(r[k]) for k in range(_N)]
-            + [fs_posterior_ppm_py(tuple(r[k] for k in range(_N)), r2)]
-        )
-        for r in census_rows
-    ]
+    patterns = [tuple(int(r[g]) for g in gcols) for r in census_rows]
+    post_rows = [(*gs, fs_posterior_ppm_py(gs, r2)) for gs in patterns]
     post = spark.createDataFrame(
         post_rows, ", ".join(f"{g} long" for g in gcols) + ", w_ppm long"
     )
@@ -542,7 +471,7 @@ def _o_pm_pu(src: str) -> tuple[str, str]:
 
 
 def o_fs_posterior(src: str) -> str:
-    """DuckDB twin of :func:`fs_posterior_expr` over params CTE ``src``."""
+    """DuckDB twin of :func:`fs_posterior_ppm_py` over params CTE ``src``."""
     pm, pu = _o_pm_pu(src)
     return f"CAST(({pm}) * {PPM} // (({pm}) + ({pu})) AS HUGEINT)"
 

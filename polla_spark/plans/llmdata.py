@@ -5586,7 +5586,7 @@ def q208_fs_trained_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Log-free by design: the posterior w = p·Πm·10^6 div (p·Πm +
     (1−p)·Πu) is the SAME exact-integer E-step algebra as training
-    (functions/linkage.fs_posterior_expr), so the whole composition
+    (functions/linkage.fs_posterior_ppm_py), so the whole composition
     stays oracle-EXACT — millibit log-weights would need log2, which
     is not bit-portable across engines (the q186 lesson).
 

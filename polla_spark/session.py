@@ -89,6 +89,12 @@ def get_spark(
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(n, 8)))
+        # static, read when the JVM's code generator first runs: one
+        # `queries` pass (perfbench) generates ~130 classes, and at
+        # Spark's default of 100 every warm pass recompiled ~100 of
+        # them in Janino (~13 ms each); at 1024 the first warm pass
+        # compiles 4 and later ones none
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -459,8 +465,57 @@ def local_frame(spark: SparkSession, rows: list[dict], schema):
     return spark.createDataFrame(table, schema)
 
 
+#: session confs that change the schema Spark infers from a parquet
+#: file; part of every schema-memo key
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: (real path, infer confs) -> (file stamp, inferred StructType), the
+#: schema memo of ``read_table``; a changed file replaces its entry
+_SCHEMAS: dict[tuple, tuple] = {}
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """What the schema of ``path`` depends on, as a key: for a file its
+    size and ``mtime_ns``; for a directory the sorted (relative name,
+    size, ``mtime_ns``) of every data file under it (names starting
+    with ``_`` or ``.``, which Spark skips, are left out). None for a
+    path the local file system cannot stat."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_size, st.st_mtime_ns)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for name in names:
+                if not name.startswith(("_", ".")):
+                    full = os.path.join(root, name)
+                    st = os.stat(full)
+                    files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(files))
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one testdata parquet, normalizing timestamp physical types.
+
+    Schema inference starts one Spark job per read, so the inferred
+    schema is memoised per process and later reads pass it to
+    ``spark.read.schema(…)``, which starts none. The memo key is the
+    file's real path, its stamp (size and ``mtime_ns``; for a
+    directory, the name, size and ``mtime_ns`` of every data file
+    under it) and the session's values of the confs that change what
+    Spark infers (``_INFER_CONFS``). Rewriting the file or directory,
+    or reading from a session with other such confs, infers again. A
+    path the local file system cannot stat (a URI) is always inferred.
 
     The driver's generator has shipped ``events.ts`` as INT64
     TIMESTAMP(NANOS) (scans as BIGINT nanoseconds under
@@ -475,7 +530,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     """
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    real = os.path.realpath(path)
+    slot = (real, *(spark.conf.get(k) for k in _INFER_CONFS))
+    stamp = _file_stamp(real)
+    hit = _SCHEMAS.get(slot)
+    if hit is not None and hit[0] == stamp:
+        df = spark.read.schema(hit[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if stamp is not None:
+            _SCHEMAS[slot] = (stamp, df.schema)
     dtypes = dict(df.dtypes)
     if name == "events" and dtypes.get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
